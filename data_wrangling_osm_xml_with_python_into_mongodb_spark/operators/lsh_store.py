@@ -611,7 +611,7 @@ class LshBucketStore:
             )
             .coalesce(max(1, int(target_files)))
         )
-        new_files, new_stats, out_dir = t._write_data_files(
+        new_files, new_stats, _, dirs = t._write_files(
             folded, base_version + 1
         )
         meta = {
@@ -637,7 +637,8 @@ class LshBucketStore:
         except Exception:
             import shutil
 
-            shutil.rmtree(out_dir, ignore_errors=True)
+            for d in dirs:
+                shutil.rmtree(d, ignore_errors=True)
             raise
 
     # -- probe ---------------------------------------------------------

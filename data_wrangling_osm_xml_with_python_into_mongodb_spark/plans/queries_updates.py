@@ -874,9 +874,11 @@ def q_cow_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_cow_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The staging (md5-keyed orders) is test scaffolding; the
-    operators under test are the change-set builder
-    (CowTable._change_set), the per-path feed writers (cow merge, dv
-    delete), and read_changes (sources/cow_table.py)."""
+    operators under test are the one mutation write path every
+    strategy shares -- the row classifier (CowTable._classify) and
+    the change-feed writer (CowTable._write_files), driven here by a
+    cow merge and a dv delete -- and read_changes
+    (sources/cow_table.py)."""
     import tempfile
 
     from ..sources.cow_table import CowTable

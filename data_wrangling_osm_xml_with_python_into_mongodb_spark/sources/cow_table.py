@@ -67,13 +67,15 @@ statement instead.
 from __future__ import annotations
 
 import contextlib
+import itertools
 import json
 import os
 import re as _re
+import threading
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -125,15 +127,15 @@ _DELETE_INLINE_MAX = 10_000
 # one delta-sized localCheckpoint the joins build from instead.
 _MATCHED_INLINE_MAX = 10_000
 
-# Merge ships the source's distinct keys to every executor as the
-# anti-join build side (the affected slice then streams through with
-# no exchange -- see _finish_merge_attempt).  The explicit broadcast
-# hint is only safe when the key count is KNOWN bounded; this cap
-# keeps the built relation well under Spark's 8 GB / 512M-row
-# broadcast limits (1M keys x ~32-64 B of typical key bytes is
-# 32-64 MB framed) while covering every delta-sized maintenance
-# batch.  Above it (or when the count is unknown) the join is left
-# unhinted and AQE picks the strategy from runtime sizes.
+# Merge ships its matched keys to every executor as the marker build
+# side (the affected slice then streams through with no exchange --
+# see CowTable._classify).  The explicit broadcast hint is only safe
+# when the key count is KNOWN bounded; this cap keeps the built
+# relation well under Spark's 8 GB / 512M-row broadcast limits (1M
+# keys x ~32-64 B of typical key bytes is 32-64 MB framed) while
+# covering every delta-sized maintenance batch.  Above it (or when the
+# count is unknown) the join is left unhinted and AQE picks the
+# strategy from runtime sizes.
 _MERGE_BROADCAST_MAX_KEYS = 1_000_000
 
 # ...and by BYTES (ADVICE r18 #1): the count gate alone lets wide
@@ -833,7 +835,7 @@ def _zvalue_expr(
 
 
 def _release_pinned(df) -> None:
-    """Best-effort release of a ``localCheckpoint(eager=True)`` frame's
+    """Best-effort release of a ``localCheckpoint()`` frame's
     pinned RDD blocks (ADVICE r18 #3: repeated bulk merges in a
     long-lived session otherwise hold blocks until the JVM GC runs the
     ContextCleaner).  The checkpointed plan is a ``LogicalRDD`` whose
@@ -854,8 +856,44 @@ def _release_pinned(df) -> None:
 #: (version/files/schema/dv/bloom walks).  The stat() per hit is the
 #: whole validation cost.  Bounded; eviction is always safe.
 #: CONSUMERS MUST NOT MUTATE returned docs (audited: none do).
+#: Process-wide, so every read-modify of it holds the lock (threads
+#: sharing tables would otherwise race the evict step).
 _DOC_CACHE: dict = {}
 _DOC_CACHE_MAX = 8
+_DOC_CACHE_LOCK = threading.Lock()
+
+
+def _by_key(rows) -> list[tuple]:
+    """``(key, *flags)`` rows -> one row per distinct key with its
+    flags OR-ed: the driver-side ``groupBy(key).agg(max(flag), ...)``.
+    Binary keys come back as unhashable ``bytearray`` and group by
+    their bytes."""
+    out: dict = {}
+    for k, *flags in rows:
+        h = bytes(k) if isinstance(k, bytearray) else k
+        if h in out:
+            flags = [a or b for a, b in zip(out[h][1:], flags)]
+        out[h] = (k, *flags)
+    return list(out.values())
+
+
+def _nullable(dt):
+    """``dt`` with every nested field, array element and map value
+    nullable.  A merge casts its source to the recorded types through
+    this: Spark refuses a cast that could put a NULL into a non-null
+    element (array<string> to array<string NOT NULL>), and file reads
+    relax nested nullability the same way."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(dt.keyType, _nullable(dt.valueType), True)
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType)) for f in dt.fields]
+        )
+    return dt
 
 
 def _log_dir(path: str) -> str:
@@ -899,13 +937,15 @@ class CowTable:
         p = _commit_path(self.path, version)
         st = os.stat(p)  # FileNotFoundError = OSError, as open() raised
         key = (p, st.st_mtime_ns, st.st_size)
-        doc = _DOC_CACHE.get(key)
+        with _DOC_CACHE_LOCK:
+            doc = _DOC_CACHE.get(key)
         if doc is None:
             with open(p) as f:
                 doc = json.load(f)
-            while len(_DOC_CACHE) >= _DOC_CACHE_MAX:
-                _DOC_CACHE.pop(next(iter(_DOC_CACHE)))
-            _DOC_CACHE[key] = doc
+            with _DOC_CACHE_LOCK:
+                while len(_DOC_CACHE) >= _DOC_CACHE_MAX:
+                    _DOC_CACHE.pop(next(iter(_DOC_CACHE)))
+                _DOC_CACHE[key] = doc
         return doc
 
     def history(self) -> list[dict]:
@@ -1185,61 +1225,6 @@ class CowTable:
             os.fsync(f.fileno())
         os.replace(tmp, os.path.join(_log_dir(self.path), name))
         return {**stats, "dv_sidecar": name}
-
-    def _change_feed_enabled(self, version: int) -> bool:
-        """Whether the change feed is on as of ``version``: the flag is
-        set at create (or by a later commit) and carried forward by
-        every commit like the txn map -- one head read answers."""
-        if version < 0:
-            return False
-        try:
-            return bool(self._commit_doc(version).get("change_feed"))
-        except (OSError, ValueError):
-            return False
-
-    def _write_change_files(self, df: DataFrame, version: int) -> list[str]:
-        """Write a commit's row-level change set (table columns +
-        ``_change_type``) under ``<path>/changes/v<N>-<token>/`` --
-        same racing-writer token discipline as data files; readers
-        only open the paths the commit doc lists.
-
-        The change set is delta-sized by contract, but its plan
-        inherits its inputs' partitioning (a 200-partition merge
-        source would scatter a 1k-row change set over 200 near-empty
-        files, taxing every read_changes/stream poll with file-open
-        overhead) -- so the write bounds itself to 8 output files.
-
-        REBALANCE, not coalesce (r18 opt round): the cow change plan
-        is exchange-free since the broadcast-marker rewrite, and a
-        coalesce on a shuffle-less plan does not just cap the WRITE
-        tasks -- it pulls the whole upstream scan (the rewritten
-        files' live rows, table-scale) into those few tasks.  The
-        rebalance exchange moves only the delta-sized change rows
-        (the scan keeps full parallelism) and AQE coalesces the
-        output to advisory-sized partitions, so a tiny change set
-        lands as ONE file (a tailing consumer's per-poll open cost)
-        while a bulk one keeps parallel right-sized writers (guide
-        §6)."""
-        out = os.path.join(
-            self.path, "changes", f"v{version}-{uuid.uuid4().hex[:8]}"
-        )
-        # REBALANCE is an AQE feature: with adaptive execution off in
-        # a caller-built session the hint no-ops and the change set
-        # would scatter over spark.sql.shuffle.partitions near-empty
-        # files (ADVICE r18 #4) -- fall back to the pre-r18
-        # coalesce(8) there.
-        aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        sized = (
-            df.hint("rebalance")
-            if str(aqe).lower() == "true"
-            else df.coalesce(8)
-        )
-        sized.write.mode("error").parquet(out)
-        return [
-            os.path.join(out, n)
-            for n in os.listdir(out)
-            if n.endswith(".parquet")
-        ]
 
     def _commit(self, version: int, files: list[str], op: str, stats: dict) -> dict:
         # Carry the change-feed flag and the per-table DV cap forward
@@ -1533,48 +1518,105 @@ class CowTable:
             txn[k] = max(int(meta["batch_id"]), int(txn.get(k, -1)))
         return txn
 
-    def _write_data_files(
-        self, df: DataFrame, version: int
-    ) -> tuple[list[str], dict, str]:
-        """Write the files of a prospective version N and harvest their
-        footer stats (keyed by basename, for the commit doc).  The data
-        dir carries a per-attempt random token: two writers racing to
-        the same version number must not collide on the DIRECTORY
-        before the commit race is even decided (Delta writes uniquely
-        named files for the same reason); readers only ever open the
-        explicit paths a commit lists, never a directory.  Returns
-        (files, stats, out_dir) -- out_dir so a losing writer can
-        remove exactly what it wrote."""
-        out = os.path.join(
-            self.path, "data", f"v{version}-{uuid.uuid4().hex[:8]}"
-        )
-        df.write.mode("error").parquet(out)
-        files = [
-            os.path.join(out, n)
-            for n in os.listdir(out)
-            if n.endswith(".parquet")
+    def _write_files(
+        self, df: DataFrame, version: int, feed: bool = False
+    ) -> tuple[list[str], dict, list[str], list[str]]:
+        """The one writer of every commit: write the files of a
+        prospective version N and return ``(data files, their footer
+        stats keyed by basename, change files, token dirs written)`` --
+        the dirs so a losing writer can remove exactly what it wrote
+        (a failed write removes them itself).  Every dir of one call
+        carries one random token: two writers racing to the same
+        version must not collide on a DIRECTORY before the commit race
+        is decided (Delta writes uniquely named files for the same
+        reason); readers only ever open the explicit paths a commit
+        lists, never a directory.
+
+        Change-feed write contract.  ``feed`` follows the table's
+        recorded ``change_feed`` flag; a mutation on a change-feed
+        table passes ``df`` carrying ``_change_type``: NULL marks a
+        data row, ``insert`` / ``update_preimage`` /
+        ``update_postimage`` / ``delete`` a change row (see
+        :meth:`_classify`).  ONE write, partitioned by disposition
+        under ``<path>/_stage/v<N>-<token>/``, emits both from a single
+        evaluation of the mutation plan -- Delta writes its change data
+        files from the same DML job -- and the files then RENAME into
+        ``data/v<N>-<token>/`` and ``changes/v<N>-<token>/``, the same
+        flat layout every reader, vacuum and loser cleanup sees.  The
+        staging dir lives outside ``data/`` (vacuum walks data/ version
+        dirs flat); renames are same-filesystem metadata ops and happen
+        BEFORE the commit links (the change-feed stream's ordering
+        contract).  Data files keep the all-NULL ``_change_type``
+        column; snapshot reads project to the recorded schema, which
+        omits it.  Change files are sized by the caller's
+        ``coalesce(n_out)`` like the data files -- they come from the
+        same tasks.  Without ``feed`` it is a plain write into
+        ``data/v<N>-<token>/``.
+
+        Zero-row data files are dropped: they carry no column stats,
+        so they would survive every range/bloom prune as permanent
+        candidates (and cost a file open per read) while contributing
+        nothing -- exchange-free plans emit one output partition per
+        input partition, empties included."""
+        import shutil
+
+        token = f"v{version}-{uuid.uuid4().hex[:8]}"
+        out = os.path.join(self.path, "data", token)
+        chg = os.path.join(self.path, "changes", token)
+        stage = os.path.join(self.path, "_stage", token)
+        dirs = [out, chg]
+        data_files: list[str] = []
+        chg_files: list[str] = []
+        try:
+            if not feed:
+                df.write.mode("error").parquet(out)
+                data_files = [
+                    os.path.join(out, n)
+                    for n in os.listdir(out)
+                    if n.endswith(".parquet")
+                ]
+            else:
+                disp = "_cdc_disp"
+                (
+                    df.withColumn(
+                        disp,
+                        F.when(F.col("_change_type").isNull(), F.lit("d"))
+                        .otherwise(F.lit("c")),
+                    )
+                    .write.mode("error")
+                    .partitionBy(disp)
+                    .parquet(stage)
+                )
+                for sub, dst, acc in (
+                    (f"{disp}=d", out, data_files),
+                    (f"{disp}=c", chg, chg_files),
+                ):
+                    sdir = os.path.join(stage, sub)
+                    if not os.path.isdir(sdir):
+                        continue
+                    os.makedirs(dst, exist_ok=True)
+                    for n in sorted(os.listdir(sdir)):
+                        if n.endswith(".parquet"):
+                            os.replace(
+                                os.path.join(sdir, n), os.path.join(dst, n)
+                            )
+                            acc.append(os.path.join(dst, n))
+            stats = self._harvest_file_stats(data_files)
+        except Exception:
+            for d in dirs:
+                shutil.rmtree(d, ignore_errors=True)
+            raise
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+        empty = {b for b, s in stats.items() if s.get("rows") == 0}
+        for b in empty:
+            with contextlib.suppress(OSError):
+                os.remove(os.path.join(out, b))
+        data_files = [
+            f for f in data_files if os.path.basename(f) not in empty
         ]
-        stats = self._harvest_file_stats(files)
-        # Zero-row files carry no column stats, so they would survive
-        # every range/bloom prune as permanent candidates (and cost a
-        # file open per read) while contributing nothing.  Exchange-
-        # free merge plans (anti-join + union, r18) emit one output
-        # partition per input partition, empties included -- drop them
-        # at the source instead of referencing them forever.
-        empty = [
-            f for f in files
-            if stats.get(os.path.basename(f), {}).get("rows") == 0
-        ]
-        if empty:
-            for f in empty:
-                with contextlib.suppress(OSError):
-                    os.remove(f)
-            files = [f for f in files if f not in set(empty)]
-            stats = {
-                b: s for b, s in stats.items()
-                if os.path.join(out, b) not in set(empty)
-            }
-        return files, stats, out
+        stats = {b: s for b, s in stats.items() if b not in empty}
+        return data_files, stats, chg_files, dirs
 
     def _key_width_estimate(self, version: int, key: str) -> int:
         """Framed per-key bytes for broadcast sizing, from the
@@ -1598,75 +1640,6 @@ class CowTable:
         except (OSError, ValueError):
             pass
         return width
-
-    def _write_fused_cdc_files(
-        self, fused: DataFrame, ct: str, version: int
-    ) -> tuple[list[str], dict, str, list[str]]:
-        """ONE partitioned staging write that emits a merge's data
-        files AND its change files from a single evaluation of
-        ``fused`` (every row pre-classified: ``ct`` NULL = data row,
-        else change row) -- the r19 fusion that halves the wide I/O of
-        a change-feed cow merge.  The staging dir lives OUTSIDE
-        ``data/`` (vacuum walks data/ version dirs flat); files then
-        RENAME into the same flat per-version token dirs every other
-        writer uses, so vacuum/readers/losers see exactly the layout
-        they always did.  Renames are same-filesystem metadata ops and
-        happen BEFORE the commit links (the change-feed stream's
-        ordering contract).  Returns ``(data_files, data_stats,
-        data_dir, change_files)``."""
-        import shutil
-
-        disp = "_cdc_disp"
-        token = uuid.uuid4().hex[:8]
-        stage = os.path.join(self.path, "_stage", f"v{version}-{token}")
-        out = os.path.join(self.path, "data", f"v{version}-{token}")
-        chg = os.path.join(self.path, "changes", f"v{version}-{token}")
-        (
-            fused.withColumn(
-                disp,
-                F.when(F.col(ct).isNull(), F.lit("d")).otherwise(
-                    F.lit("c")
-                ),
-            )
-            .write.mode("error")
-            .partitionBy(disp)
-            .parquet(stage)
-        )
-        data_files: list[str] = []
-        chg_files: list[str] = []
-        for sub, dst, acc in (
-            (f"{disp}=d", out, data_files),
-            (f"{disp}=c", chg, chg_files),
-        ):
-            sdir = os.path.join(stage, sub)
-            if not os.path.isdir(sdir):
-                continue
-            os.makedirs(dst, exist_ok=True)
-            for n in sorted(os.listdir(sdir)):
-                if n.endswith(".parquet"):
-                    os.replace(
-                        os.path.join(sdir, n), os.path.join(dst, n)
-                    )
-                    acc.append(os.path.join(dst, n))
-        shutil.rmtree(stage, ignore_errors=True)
-        stats = self._harvest_file_stats(data_files)
-        # partitionBy never writes an empty per-partition file, but
-        # keep _write_data_files' zero-row guard for parity
-        empty = {
-            f for f in data_files
-            if stats.get(os.path.basename(f), {}).get("rows") == 0
-        }
-        if empty:
-            for f in empty:
-                with contextlib.suppress(OSError):
-                    os.remove(f)
-            data_files = [f for f in data_files if f not in empty]
-            stats = {
-                b: s
-                for b, s in stats.items()
-                if os.path.join(out, b) not in empty
-            }
-        return data_files, stats, out, chg_files
 
     def _harvest_file_stats(self, files: list[str]) -> dict:
         """Per-file footer stats keyed by basename.  Harvested
@@ -1784,7 +1757,7 @@ class CowTable:
                         "per-file floor)"
                     )
                 stats["bloom_conf"]["mcap"] = int(bloom_bits_max)
-        files, fstats, _ = t._write_data_files(df, 0)
+        files, fstats, _, _ = t._write_files(df, 0)
         stats["files_written"] = len(files)
         stats["file_stats"] = fstats
         t._commit(0, files, "create", stats)
@@ -2304,16 +2277,9 @@ class CowTable:
         skipping without rewriting data that is already well-packed
         (the files' own footers were never wrong, only the log's
         encoding of them)."""
-        for _ in range(max(0, retries)):
-            try:
-                return self._compact_attempt(
-                    target_rows, cluster_by, refresh_stats, zorder_boundaries
-                )
-            except ConcurrentWriteError:
-                continue
-        return self._compact_attempt(
+        return self._rebase(retries, lambda: self._compact_attempt(
             target_rows, cluster_by, refresh_stats, zorder_boundaries
-        )
+        ))
 
     def _compact_attempt(
         self, target_rows: int, cluster_by: str | list[str] | None = None,
@@ -2407,7 +2373,7 @@ class CowTable:
             # coalesce, not repartition: bin-packing needs no shuffle.
             merged = merged.coalesce(nout)
         new_version = base_version + 1
-        new_files, new_stats, out_dir = self._write_data_files(
+        new_files, new_stats, _, dirs = self._write_files(
             merged, new_version
         )
         try:
@@ -2442,7 +2408,8 @@ class CowTable:
         except ConcurrentWriteError:
             import shutil
 
-            shutil.rmtree(out_dir, ignore_errors=True)
+            for d in dirs:
+                shutil.rmtree(d, ignore_errors=True)
             raise
 
     def vacuum(
@@ -2646,13 +2613,13 @@ class CowTable:
                         pass
                 if live == 0:
                     shutil.rmtree(vdir, ignore_errors=True)
-        # Fused-write staging GC (r19): _write_fused_cdc_files renames
-        # its output out of <path>/_stage/ before committing, so any
-        # dir still there belongs to a dead or in-flight writer --
-        # remove it once past the same grace window that shields
-        # in-flight data files.  Committed files are never under
-        # _stage/, so this can only ever delete never-referenced
-        # output.
+        # Staging GC: _write_files renames a change-feed mutation's
+        # output out of <path>/_stage/ and removes the dir before
+        # committing, so any dir still there belongs to a dead or
+        # in-flight writer -- remove it once past the same grace
+        # window that shields in-flight data files.  Committed files
+        # are never under _stage/, so this can only ever delete
+        # never-referenced output.
         stage_root = os.path.join(self.path, "_stage")
         if os.path.isdir(stage_root):
             for d in sorted(os.listdir(stage_root)):
@@ -2767,7 +2734,9 @@ class CowTable:
         rewritten/new files carry them, carried files do not, and
         reads fill the gap with NULLs via the recorded snapshot schema
         (so old snapshots time-travel with their own narrower
-        schema).
+        schema).  Either way table columns keep their RECORDED types:
+        source values are cast to them (ANSI: a value that does not
+        fit raises instead of widening the table).
 
         ``bloom_probe``: how the bloom candidate prune runs -- None
         (default) picks by batch size (driver-side at or below
@@ -2793,195 +2762,341 @@ class CowTable:
         overhead never accrues unboundedly.  Duplicate-key edge: a
         DUPLICATE-key target row set collapses to the single source
         row under BOTH strategies (mor kills all its positions; cow's
-        anti-join drops every matched copy and the union emits the
-        source row once per source row) -- merge-maintained tables
-        are unique-keyed by contract; the paths also agree on
-        duplicate keys since r18 (cow's pre-r18 full-outer join
-        fanned the source row out per matched target row instead).
-        Positions are driver-coordinated metadata bounded by
+        rewrite drops every matched copy and emits the source row once
+        per source row) -- merge-maintained tables are unique-keyed by
+        contract.  Positions are driver-coordinated metadata bounded by
         ``_DV_COLLECT_MAX`` dead rows per commit; bulk mutations past
         that must use cow (the same guidance Delta gives)."""
-        # Delete keys: the common (incremental-maintenance) batch is
-        # delta-sized, so collect it ONCE and inline as an isin()
-        # literal -- reused for the touch set, the filter predicate,
-        # and the commit metadata without re-evaluating the plan.
-        # NULL keys never match a join, so dropping them changes
-        # nothing and keeps the isin() predicate three-valued-logic-
-        # safe.  Above _DELETE_INLINE_MAX distinct keys the literal
-        # list would bloat the Catalyst plan and driver heap, so the
-        # batch stays a DataFrame (pinned once -- the attempts traverse
-        # it repeatedly) and the filter becomes an anti-join instead;
-        # the limit()+collect probe reads at most MAX+1 keys to decide.
         if strategy not in ("cow", "mor"):
             raise ValueError(
                 f"strategy must be 'cow' or 'mor', got {strategy!r}"
             )
-        dk_vals: list = []
-        dk_df: DataFrame | None = None
-        n_dk = 0
+        ktype = source.schema[key].dataType
         touch_rows: list | None = None
-        # Fused touch/delete-key probe (r19): ONE bounded collect over
-        # source keys UNION delete keys (flagged per side) replaces
-        # the dk probe here AND the per-attempt envelope job in
-        # _candidate_files -- and the collected rows hand every
-        # attempt its touch set as a broadcast LocalRelation, so the
-        # batch plans are evaluated exactly once for all of planning
-        # (the detection scan used to re-evaluate the source per
-        # attempt).  Touch keys are snapshot-independent, so reuse
-        # across rebase attempts is exact, like the dk reuse before
-        # it.  Skipped when the caller supplied a covering envelope
-        # (LSH appends: zero planning jobs stays zero).  Oversized
-        # batches fall back to the pre-r19 two-probe flow.
+        n_dk = 0
+        # ONE bounded probe over the raw source keys UNION the delete
+        # keys (flagged per side): when it fits, the flags merge on the
+        # driver and every attempt gets its touch set as a broadcast
+        # LocalRelation, so nothing in planning or matching evaluates
+        # the batch plans again.  The probe reads at most cap+1 raw
+        # rows -- an oversized source is never aggregated just to be
+        # discarded.  Touch keys are snapshot-independent, so reuse
+        # across rebase attempts is exact.  Skipped when the caller
+        # supplied a covering envelope (LSH appends: zero planning
+        # jobs stays zero).
         if touch_envelope is None and bloom_probe != "distributed":
-            tk_flagged = source.select(
+            flagged = source.select(
                 F.col(key).alias("_mk"),
                 F.lit(True).alias("_s"),
                 F.lit(False).alias("_d"),
             )
             if deletes is not None:
-                tk_flagged = tk_flagged.unionByName(
+                flagged = flagged.unionByName(
                     deletes.select(
                         F.col(key).alias("_mk"),
                         F.lit(False).alias("_s"),
                         F.lit(True).alias("_d"),
                     ).filter(F.col("_mk").isNotNull())
                 )
-            tk_flagged = tk_flagged.groupBy("_mk").agg(
-                F.max("_s").alias("_s"), F.max("_d").alias("_d")
+            raw = flagged.limit(_BLOOM_PRUNE_MAX_KEYS + 1).collect()
+            if len(raw) <= _BLOOM_PRUNE_MAX_KEYS:
+                keyed = _by_key(raw)
+                touch_rows = [Row(_mk=k, _s=s) for k, s, _ in keyed]
+                n_dk = sum(1 for _, _, d in keyed if d)
+        # Fallback for oversized (or unprobed) batches: the touch set
+        # stays a frame.  Delete keys below _DELETE_INLINE_MAX still
+        # ride as local rows; past it they pin ONCE (the attempts
+        # traverse them repeatedly) and the count is taken here, not
+        # per attempt.
+        dk_df: DataFrame | None = None
+        if touch_rows is not None:
+            touch = self._key_rel(touch_rows, ktype)
+        else:
+            touch = source.select(
+                F.col(key).alias("_mk"), F.lit(True).alias("_s")
             )
-            probe = tk_flagged.limit(_BLOOM_PRUNE_MAX_KEYS + 1).collect()
-            if len(probe) <= _BLOOM_PRUNE_MAX_KEYS:
-                touch_rows = probe
-                dk_vals = [
-                    r["_mk"]
-                    for r in probe
-                    if r["_d"] and r["_mk"] is not None
-                ]
-                n_dk = len(dk_vals)
-        if deletes is not None and touch_rows is None:
-            dk = (
-                deletes.select(F.col(key).alias("_dk"))
-                .filter(F.col("_dk").isNotNull())
-                .distinct()
-            )
-            probe = dk.limit(_DELETE_INLINE_MAX + 1).collect()
-            if len(probe) > _DELETE_INLINE_MAX:
-                dk_df = dk.localCheckpoint(eager=True)
-                # count ONCE here (r18 VERDICT #6): the commit-doc
-                # delete_keys metadata used to re-count the pinned
-                # frame per attempt
-                n_dk = dk_df.count()
-            else:
-                dk_vals = [r["_dk"] for r in probe]
-                n_dk = len(dk_vals)
-
-        attempt = 0
-        try:
-            while True:
-                try:
-                    return self._merge_attempt(
-                        source, key, dk_vals, dk_df, meta, evolve_schema,
-                        bloom_probe, strategy, touch_envelope,
-                        touch_rows=touch_rows, n_dk=n_dk,
+            if deletes is not None:
+                dk = (
+                    deletes.select(F.col(key).alias("_mk"))
+                    .filter(F.col("_mk").isNotNull())
+                    .distinct()
+                )
+                probe = dk.limit(_DELETE_INLINE_MAX + 1).collect()
+                if len(probe) > _DELETE_INLINE_MAX:
+                    # lazy pin: the count is the action that fills it
+                    dk = dk_df = dk.localCheckpoint(eager=False)
+                    n_dk = dk_df.count()
+                else:
+                    n_dk = len(probe)
+                    dk = self._key_rel([(r[0], False) for r in probe], ktype)
+                touch = (
+                    touch.unionByName(
+                        dk.select("_mk", F.lit(False).alias("_s"))
                     )
-                except ConcurrentMergeConflictError:
-                    raise
-                except ConcurrentWriteError:
-                    if attempt >= retries:
-                        raise
-                    attempt += 1
+                    .groupBy("_mk")
+                    .agg(F.max("_s").alias("_s"))
+                )
+            else:
+                touch = touch.distinct()
+        # the probe above OVERFLOWED: don't pay the doomed limit-collect
+        # again per attempt
+        skip_probe = (
+            touch_rows is None
+            and touch_envelope is None
+            and bloom_probe != "distributed"
+        )
+        try:
+            return self._rebase(retries, lambda: self._mutate_attempt(
+                key, source, touch, touch_rows, skip_probe, strategy,
+                meta, evolve_schema, bloom_probe, touch_envelope, n_dk,
+            ))
         finally:
             if dk_df is not None:
                 _release_pinned(dk_df)
 
-    def _merge_attempt(
-        self, source: DataFrame, key: str, dk_vals: list,
-        dk_df: DataFrame | None = None,
+    def delete(
+        self,
+        key: str,
+        values=None,
+        deletes: DataFrame | None = None,
+        mode: str = "dv",
+        retries: int = 0,
         meta: dict | None = None,
-        evolve_schema: bool = False,
         bloom_probe: str | None = None,
-        strategy: str = "cow",
-        touch_envelope: tuple | None = None,
-        touch_rows: list | None = None,
-        n_dk: int | None = None,
     ) -> dict:
-        """One optimistic attempt of :meth:`merge` against the current
-        head.  On a lost commit race, classifies the failure: if the
-        interleaved commit removed any file THIS attempt rewrote
-        (possible same-key write), raises
-        :class:`ConcurrentMergeConflictError`; otherwise re-raises the
-        plain retryable :class:`ConcurrentWriteError`."""
+        """``DELETE FROM ... WHERE key IN (...)``: remove every row
+        whose ``key`` is in ``values`` (a scalar or list) or in
+        ``deletes`` (any frame carrying a ``key`` column).
+
+        ``mode="dv"`` (default, merge-on-read): NO data file is
+        rewritten -- matched rows are marked dead by row position in
+        the commit's deletion-vector sidecar, an O(batch + positions)
+        metadata commit.  At 100 TB a GDPR-style scattered delete (a
+        few thousand keys spread across thousands of files) costs
+        kilobytes of sidecar instead of rewriting terabytes; the
+        candidate scan itself is range+bloom pruned like merge's
+        (:meth:`_candidate_files`).  Dead rows stay physically present
+        until :meth:`compact` materializes the vectors; every reader
+        filters them by position meanwhile.  Bounded by
+        ``_DV_COLLECT_MAX`` positions per commit -- bulk deletes must
+        use ``mode="cow"``.
+
+        ``mode="cow"``: delegate to :meth:`merge` with an empty source
+        (rewrite the matched files without the rows -- the
+        read-optimized form).
+
+        ``retries``/``meta``/``bloom_probe``: as :meth:`merge`;
+        rebase conflicts classify the same way (a concurrent rewrite
+        of a file this delete marked dead raises
+        :class:`ConcurrentMergeConflictError`)."""
+        if mode not in ("dv", "cow"):
+            raise ValueError(f"mode must be 'dv' or 'cow', got {mode!r}")
+        if (values is None) == (deletes is None):
+            raise ValueError("pass exactly one of values= or deletes=")
+        head = self.version()
+        if head < 0:
+            raise FileNotFoundError(f"no CowTable at {self.path}")
+        snap_schema = self._snapshot_schema(head)
+        ktype = snap_schema[key].dataType
+        envelope = None
+        probe_rows = None
+        if values is not None:
+            vals = (
+                list(values)
+                if isinstance(values, (list, tuple, set))
+                else [values]
+            )
+            from pyspark.sql.types import StructField, StructType
+
+            deletes = self.spark.createDataFrame(
+                [(v,) for v in vals],
+                StructType([StructField(key, ktype)]),
+            )
+            # The touch keys are IN HAND as driver literals: derive the
+            # range-prune envelope and the (bounded) probe set here
+            # instead of running jobs to re-learn them from the frame
+            # just built.  NULLs never match a join, so dropping them
+            # keeps the envelope exact.
+            nn = [v for v in vals if v is not None]
+            if nn:
+                try:
+                    envelope = (min(nn), max(nn))
+                except TypeError:
+                    envelope = None  # mixed/unorderable: fall back
+            if len(nn) <= _BLOOM_PRUNE_MAX_KEYS:
+                probe_rows = [
+                    Row(_mk=k, _s=False)
+                    for k, _ in _by_key((v, False) for v in nn)
+                ]
+        if mode == "cow":
+            empty = self.spark.createDataFrame([], snap_schema)
+            return self.merge(
+                empty, key, deletes=deletes, retries=retries, meta=meta,
+                bloom_probe=bloom_probe, touch_envelope=envelope,
+            )
+        touch = (
+            self._key_rel(probe_rows, ktype)
+            if probe_rows is not None
+            else deletes.select(
+                F.col(key).alias("_mk"), F.lit(False).alias("_s")
+            )
+            .filter(F.col("_mk").isNotNull())
+            .distinct()
+        )
+        return self._rebase(retries, lambda: self._mutate_attempt(
+            key, None, touch, probe_rows, False, "dv", meta, False,
+            bloom_probe, envelope, 0,
+        ))
+
+    @staticmethod
+    def _rebase(retries: int, attempt):
+        """Optimistic-concurrency loop (Delta's protocol): after a lost
+        commit race, run ``attempt`` again against the new head, at
+        most ``retries`` more times.  A classified write-write conflict
+        (:class:`ConcurrentMergeConflictError`) is never retried."""
+        for n in itertools.count():
+            try:
+                return attempt()
+            except ConcurrentMergeConflictError:
+                raise
+            except ConcurrentWriteError:
+                if n >= retries:
+                    raise
+
+    def _mutate_attempt(
+        self, key: str, source: DataFrame | None, touch: DataFrame,
+        touch_rows: list | None, skip_probe: bool, strategy: str,
+        meta: dict | None, evolve_schema: bool, bloom_probe: str | None,
+        touch_envelope: tuple | None, n_dk: int,
+    ) -> dict:
+        """One optimistic attempt of a keyed mutation against the
+        current head: :meth:`merge` (``strategy`` ``"cow"`` or
+        ``"mor"``) or a deletion-vector :meth:`delete` (no ``source``,
+        strategy ``"dv"``).  ``touch`` is the touch-key set ``(_mk,
+        _s)`` -- ``_s`` true for a source key, false for a delete-only
+        key -- as a broadcast LocalRelation when ``touch_rows`` holds
+        it on the driver.  Every shape runs the same back half:
+
+        1. :meth:`_candidate_files` prunes the files that may hold a
+           touch key (range stats, then bloom);
+        2. matching: cow finds the AFFECTED files with one detection
+           collect of (file, key, ``_s``) triples
+           (:meth:`_affected_files`); mor and dv harvest the matched
+           rows' dead positions with one grouped collect that also
+           returns the matched (key, ``_s``) pairs under the change
+           feed (:meth:`_dv_positions_for`).  Either way the matched
+           keys become one marker relation -- driver rows as a
+           broadcast LocalRelation, or the pinned frame past
+           ``_MATCHED_INLINE_MAX``;
+        3. :meth:`_classify` tags the pre-image (cow: the rewritten
+           files' live rows; mor/dv: the pinned matched rows) and the
+           projected source against the markers -- one plan, change
+           emission on or off by the table's ``change_feed`` flag;
+        4. :meth:`_commit_mutation` writes it with the one writer and
+           commits, cleans up after a lost race and classifies it.
+
+        Strict-mode schema errors (:meth:`_project_source`) raise
+        before anything is pinned or written."""
         base_version = self.version()
-        snapshot_files = self.files(base_version)
-
-        # The touch-key set carries a source-membership flag ``_s``
-        # (r18 opt round): the affected-file detection scan joins
-        # against it anyway, so collecting (file, key, _s) instead of
-        # file names alone hands the back half the matched SOURCE keys
-        # and matched DELETE-only keys as driver literals at zero
-        # extra jobs -- which is what lets the rewrite and the change
-        # set classify against tiny broadcast LocalRelations (see
-        # _finish_merge_attempt).
-        #
-        # r19: when merge() collected the (bounded) touch rows, the
-        # touch set is rebuilt here as a LocalRelation -- data already
-        # in the driver's hands -- so NOTHING in planning or detection
-        # evaluates the source plan again (the detection scan used to
-        # re-run the full source subtree per attempt), and the
-        # detection join build side is a broadcast of local rows.
-        if touch_rows is not None:
-            from pyspark.sql.types import (
-                BooleanType, StructField, StructType,
+        doc = self._commit_doc(base_version)
+        snapshot_files = doc["files"]
+        snap_schema = self._snapshot_schema(base_version)
+        dv_map = self._dv_map(doc)
+        feed = bool(doc.get("change_feed"))
+        src = (
+            None
+            if source is None
+            else self._project_source(
+                source, snap_schema, evolve_schema, base_version
             )
-
-            ktype = source.schema[key].dataType
-            touch_keys = F.broadcast(self.spark.createDataFrame(
-                [(r["_mk"], bool(r["_s"])) for r in touch_rows],
-                StructType([
-                    StructField("_mk", ktype),
-                    StructField("_s", BooleanType()),
-                ]),
-            ))
-        else:
-            sk = source.select(
-                F.col(key).alias("_mk"), F.lit(True).alias("_s")
-            )
-            if dk_vals:
-                touch_keys = sk.unionByName(
-                    self.spark.createDataFrame(
-                        [(v, False) for v in dk_vals], sk.schema
-                    )
-                ).groupBy("_mk").agg(F.max("_s").alias("_s"))
-            elif dk_df is not None:
-                touch_keys = sk.unionByName(
-                    dk_df.select(
-                        F.col("_dk").alias("_mk"), F.lit(False).alias("_s")
-                    )
-                ).groupBy("_mk").agg(F.max("_s").alias("_s"))
-            else:
-                touch_keys = sk.distinct()
-
-        candidates, bloom_mode, n_touch, _ = self._candidate_files(
-            touch_keys, key, base_version, bloom_probe,
+        )
+        candidates, bloom_mode, n_touch, rows = self._candidate_files(
+            touch, key, base_version, bloom_probe,
             probe_rows=touch_rows, touch_envelope=touch_envelope,
-            # merge() already ran the bounded probe whenever it could;
-            # touch_rows=None there means it OVERFLOWED -- don't pay
-            # the doomed limit-collect again per attempt
-            skip_probe=(
-                touch_rows is None
-                and touch_envelope is None
-                and bloom_probe != "distributed"
-            ),
+            skip_probe=skip_probe,
         )
-        finish = (
-            self._finish_merge_mor
-            if strategy == "mor"
-            else self._finish_merge_attempt
-        )
-        return finish(
-            source, key, dk_vals, dk_df, meta, evolve_schema,
-            base_version, snapshot_files, touch_keys, candidates,
-            bloom_mode, n_touch, n_dk=n_dk,
+        if touch_rows is None and rows is not None:
+            # the planner's bounded probe collected the keys: match
+            # against local rows, never the caller's plan again
+            touch = self._key_rel(rows, touch.schema["_mk"].dataType)
+        stats: dict = {"files_probed": len(candidates)}
+        if bloom_mode is not None:
+            stats["bloom_probe"] = bloom_mode
+        if strategy == "cow":
+            affected, pairs, pinned = self._affected_files(
+                candidates, snap_schema, dv_map, key, touch
+            )
+            kept = [
+                f for f in snapshot_files
+                if os.path.basename(f) not in affected
+            ]
+            rewritten = [
+                f for f in snapshot_files if os.path.basename(f) in affected
+            ]
+            # DV-aware: a rewritten file's live rows are its physical
+            # rows MINUS its deletion vector -- materialized here for
+            # free (_maintain_dv drops the entry with the file).  Read
+            # under the output layout so evolved columns NULL-fill.
+            pre = (
+                self._read_files(rewritten, src.schema, dv_map)
+                if rewritten
+                else None
+            )
+            stats["files_rewritten"] = len(rewritten)
+        else:
+            dv_updates, n_dead, pinned, pairs = self._dv_positions_for(
+                candidates, snap_schema, dv_map, key, touch,
+                want_rows=feed,
+            )
+            kept, rewritten, affected = snapshot_files, [], set(dv_updates)
+            pre = (
+                pinned.select(*snap_schema.fieldNames())
+                if pinned is not None
+                else None
+            )
+            stats.update(
+                strategy=strategy, files_rewritten=0,
+                dv_files_updated=len(dv_updates), rows_dv_deleted=n_dead,
+                dv_updates=dv_updates,
+            )
+        if source is not None:
+            stats["delete_keys"] = n_dk
+        stats["schema"] = (
+            snap_schema if src is None else src.schema
+        ).jsonValue()
+        markers = None
+        if pairs is not None:
+            markers = self._key_rel(pairs, snap_schema[key].dataType)
+        elif pinned is not None:
+            markers = pinned.select(F.col("_k").alias("_mk"), "_s").distinct()
+            # Broadcast gate for the pinned marker set: a count bound
+            # AND a byte estimate from the snapshot's own footer stats
+            # (wide string keys could push a count-gated build side
+            # past driver/broadcast limits); else AQE decides.
+            if (
+                n_touch is not None
+                and n_touch <= _MERGE_BROADCAST_MAX_KEYS
+                and n_touch * self._key_width_estimate(base_version, key)
+                <= _MERGE_BROADCAST_MAX_BYTES
+            ):
+                markers = F.broadcast(markers)
+        out = self._classify(pre, src, markers, key, feed)
+        if pre is not None:
+            # coalesce target: no shuffle, caps the output file count
+            # (data and change files alike) at the rewritten-file
+            # count, FLOORED so an insert-heavy merge that touches one
+            # file does not collapse the whole source evaluation into
+            # a single task.  coalesce(n) with n >= input partitions
+            # is identity, so the floor only narrows scattered plans.
+            # A source-only plan keeps the caller's partitioning: a
+            # coalesce right above it would override the caller's own.
+            out = out.coalesce(max(
+                len(rewritten),
+                min(8, self.spark.sparkContext.defaultParallelism),
+            ))
+        return self._commit_mutation(
+            "merge" if source is not None else "delete",
+            base_version, kept, out, feed, affected, stats, meta, pinned,
         )
 
     def _candidate_files(
@@ -3198,413 +3313,50 @@ class CowTable:
         )
         return candidates, bloom_mode, n_touch, touch_rows
 
-    def _finish_merge_attempt(
-        self, source: DataFrame, key: str, dk_vals: list,
-        dk_df: DataFrame | None, meta: dict | None, evolve_schema: bool,
-        base_version: int, snapshot_files: list[str],
-        touch_keys: DataFrame, candidates: list[str],
-        bloom_mode: str | None, n_touch: int | None = None,
-        n_dk: int | None = None,
-    ) -> dict:
-        """Copy-on-write back half of :meth:`_merge_attempt`: find the
-        affected files among ``candidates``, re-merge exactly their
-        live rows with the source, rewrite them, carry the rest.
+    def _affected_files(
+        self, candidates: list[str], schema, dv_map: dict, key: str,
+        touch_keys: DataFrame,
+    ) -> tuple[set, list | None, "DataFrame | None"]:
+        """Copy-on-write matching: ``(affected basenames, matched (key,
+        _s) pairs or None, pinned matched triples or None)``.  ONE
+        detection collect returns the distinct (file, key, source-flag)
+        triples of the candidates' LIVE rows (rows already dead by a
+        merge-on-read commit can neither mark their file affected nor
+        be resurrected by the rewrite).  The matched keys are
+        delta-sized (bounded by the touch-key count) and are exactly
+        what the classifier needs, so collecting them here costs no
+        extra source evaluation.  Past ``_MATCHED_INLINE_MAX`` triples
+        they pin as one localCheckpoint instead (the driver never holds
+        an unbounded key set) and the markers derive from the pin.
 
-        Change-feed commits take the FUSED single-wide-pass write
-        (r19): the rewritten files' live rows and the source are read
-        ONCE, every row classified in-plan (data row / change row via
-        broadcast-LocalRelation markers), and one partitioned staging
-        write emits the data files and the change files together --
-        the pre-r19 shape scanned the rewritten slice wide twice
-        (data rewrite + change-set pre-image).  Data files carry a
-        hidden all-NULL ``_change_type`` column; snapshot reads
-        project to the recorded schema, which omits it."""
-        snap_schema = self._snapshot_schema(base_version)
-        dv_map = self._dv_map(self._commit_doc(base_version))
-        mk_all: list | None = []  # matched touch keys (source + delete)
-        mk_src: list | None = []  # matched SOURCE keys only
-        mk_df: DataFrame | None = None  # >cap fallback: pinned (key, _s)
-        if candidates:
-            # DV-aware candidate scan: rows already dead by a
-            # merge-on-read commit are filtered BEFORE matching, so a
-            # deleted row can neither mark its file affected nor be
-            # resurrected by the rewrite below.
-            tagged = self._read_files(
-                candidates, snap_schema, dv_map, file_col="_file"
-            )
-            # ONE detection collect returns distinct (file, key,
-            # source-flag) triples -- the same scan+join that used to
-            # return file names alone (r18 opt round).  The matched
-            # keys are delta-sized (bounded by the touch-key count)
-            # and are exactly what the rewrite and the change set
-            # need, so collecting them here lets both classify
-            # against tiny broadcast LocalRelations with zero extra
-            # source evaluations.  Past _MATCHED_INLINE_MAX rows the triples
-            # pin as one localCheckpoint instead (driver never holds
-            # an unbounded key set) and the consumers join against it.
-            matched = (
-                tagged.join(
-                    touch_keys, tagged[key] == F.col("_mk"), "inner"
-                )
-                .select(
-                    "_file",
-                    F.col(key).alias("_k"),
-                    (
-                        F.col("_s") if "_s" in touch_keys.columns
-                        else F.lit(True)
-                    ).alias("_s"),
-                )
-                .distinct()
-            )
-            # ALWAYS limit-probe (ADVICE r18 #2): a touch count past
-            # the cap does NOT bound the matched count from below -- a
-            # large source with few actual matches still comes back
-            # inline, keeping the whole merge on the LocalRelation
-            # fast path.  When the probe does overflow, its cost was
-            # one key+file column-pruned scan of the candidates -- the
-            # bulk path's own pinning scan, paid once more.
-            probe = matched.limit(_MATCHED_INLINE_MAX + 1).collect()
-            if len(probe) <= _MATCHED_INLINE_MAX:
-                affected_base = {r["_file"] for r in probe}
-                mk_all = sorted({r["_k"] for r in probe})
-                mk_src = sorted({r["_k"] for r in probe if r["_s"]})
-            else:
-                mk_all = mk_src = None
-                mk_df = matched.localCheckpoint(eager=True)
-                affected_base = {
-                    r["_file"]
-                    for r in mk_df.select("_file").distinct().collect()
-                }
-        else:
-            affected_base = set()
-        kept = [
-            f
-            for f in snapshot_files
-            if os.path.basename(f) not in affected_base
-        ]
-        rewritten = [f for f in snapshot_files if f not in kept]
-
-        # Re-merge ONLY the affected slice; unmatched source rows (the
-        # inserts) can't live in any unaffected file, so emitting them
-        # here is exact and emits each exactly once.  Matched keys
-        # (source AND delete -- an unmatched delete key cannot appear
-        # in any file, so filtering on the matched set removes every
-        # copy the old per-delete-key filter did) drop below;
-        # NULL-keyed target rows pass: NULL never equals a touch key.
-        # DV-aware: a rewritten file's live rows are its physical rows
-        # MINUS its deletion vector -- materialized here for free (the
-        # new file simply lacks them, and _maintain_dv drops the entry
-        # with the file).
-        affected_df = self._read_files(rewritten, snap_schema, dv_map)
-        if evolve_schema:
-            have = set(affected_df.columns)
-            for fld in source.schema.fields:
-                if fld.name not in have:
-                    affected_df = affected_df.withColumn(
-                        fld.name, F.lit(None).cast(fld.dataType)
-                    )
-        pre_image = affected_df  # pre-delete-filter slice, for the feed
-        # Source projection onto the (possibly evolved) table layout.
-        # Strict mode: the schema is a contract -- a source missing a
-        # table column fails HERE, deterministically, with the columns
-        # named (also the deterministic outcome when a rebase finds a
-        # concurrently-widened schema: Delta's MetadataChanged
-        # analogue).  Evolve mode: table columns absent from the
-        # source NULL-fill, so two concurrent evolving merges rebase
-        # cleanly into the union schema.
-        missing = [
-            f for f in affected_df.schema.fields
-            if f.name not in set(source.columns)
-        ]
-        if missing and not evolve_schema:
-            raise ValueError(
-                f"merge source is missing table column(s) "
-                f"{[f.name for f in missing]} of {self.path} (snapshot "
-                f"v{base_version}); pass evolve_schema=True to NULL-fill, "
-                "or align the source"
-            )
-        src_proj = source
-        for fld in missing:
-            src_proj = src_proj.withColumn(
-                fld.name, F.lit(None).cast(fld.dataType)
-            )
-        # Matched keys take the source row WHOLESALE, so the merged
-        # output is exactly (affected live rows whose key matches no
-        # source key) + (every source row): an anti-join + union.  The
-        # pre-r18 merge_upsert form (full-outer join) shuffled AND
-        # sorted the whole affected slice by key -- table-scale on a
-        # spread-key delta -- to attach a delta-sized source; full
-        # outer is not broadcastable, so no planner could save it.
-        # With the anti-join the affected slice streams
-        # scan->filter->write with ZERO exchange (guide §2.4/§3.1).
-        # Row set: NULL-keyed target rows never equal a source key
-        # (anti keeps them, as full-outer did); NULL-keyed source rows
-        # always insert; a matched key emits the source row exactly
-        # once per source row.  On a DUPLICATE-key target this
-        # collapses the matched set to the source row -- the mor
-        # path's documented behaviour, and merge-maintained tables are
-        # unique-keyed by contract (see :meth:`merge`).
-        src_aligned = src_proj.select(affected_df.columns)
-        new_version = base_version + 1
-        feed = self._change_feed_enabled(base_version)
-        # Broadcast gate for the bulk-path key sets: count bound AND a
-        # byte estimate (ADVICE r18 #1 -- wide string keys could push
-        # a count-gated build side past driver/broadcast limits); the
-        # width estimate comes from the snapshot's own footer stats.
-        small_keys = (
-            n_touch is not None
-            and n_touch <= _MERGE_BROADCAST_MAX_KEYS
-            and n_touch * self._key_width_estimate(base_version, key)
-            <= _MERGE_BROADCAST_MAX_BYTES
+        ALWAYS limit-probed: a touch count past the cap does NOT bound
+        the matched count from below -- a large source with few actual
+        matches still comes back inline.  When the probe does overflow,
+        its cost was one key+file column-pruned scan of the candidates,
+        paid once more by the pinning scan."""
+        if not candidates:
+            return set(), [], None
+        tagged = self._read_files(candidates, schema, dv_map, file_col="_file")
+        matched = (
+            tagged.join(touch_keys, tagged[key] == F.col("_mk"), "inner")
+            .select("_file", F.col(key).alias("_k"), "_s")
+            .distinct()
         )
-        # coalesce target: no shuffle, caps the per-merge output file
-        # count at the rewritten-file count -- FLOORED (ADVICE r18 #5)
-        # so an insert-heavy merge that touches one file does not
-        # collapse the whole source evaluation and write into a single
-        # task.  coalesce(n) with n >= input partitions is identity,
-        # so the floor only widens genuinely narrow plans.
-        n_out = max(
-            len(rewritten),
-            min(8, self.spark.sparkContext.defaultParallelism),
-        )
-        chg_files: list[str] = []
-
-        def _key_rel(vals: list, name: str) -> DataFrame:
-            # driver-held keys as a broadcast LocalRelation, NOT an
-            # isin() literal (a multi-thousand-literal In costs ~2 s
-            # of driver planning PER ACTION on this box)
-            from pyspark.sql.types import StructField, StructType
-
-            return F.broadcast(self.spark.createDataFrame(
-                [(v,) for v in vals],
-                StructType(
-                    [StructField(name, affected_df.schema[key].dataType)]
-                ),
-            ))
-
-        if not rewritten:
-            # Nothing matched (insert-only batch, or the range/bloom
-            # prune refuted every file): the merged output IS the
-            # source -- a single source evaluation, no join, exactly
-            # the pre-r18 cost.  LSH appends (files_probed == 0 by
-            # design) live entirely on this path.  With the feed on,
-            # the change set is source-only (all inserts) -- there is
-            # no wide slice to fuse with, so the separate delta-sized
-            # change write stays.
-            merged = src_aligned
-            if feed:
-                chg_files = self._write_change_files(
-                    self._change_set(
-                        pre_image, src_aligned, key, dk_vals, dk_df,
-                        small_keys=small_keys,
-                        sk_vals=mk_src,
-                        sk_df=(
-                            mk_df.filter(F.col("_s"))
-                            .select(F.col("_k").alias("_sk"))
-                            .distinct()
-                            if mk_df is not None
-                            else None
-                        ),
-                    ),
-                    new_version,
-                )
-            new_files, new_stats, out_dir = self._write_data_files(
-                merged, new_version
+        probe = matched.limit(_MATCHED_INLINE_MAX + 1).collect()
+        if len(probe) <= _MATCHED_INLINE_MAX:
+            return (
+                {r["_file"] for r in probe},
+                [(r["_k"], r["_s"]) for r in probe],
+                None,
             )
-            data_schema_json = merged.schema.jsonValue()
-        elif feed:
-            # FUSED single-wide-pass CDC write (r19, VERDICT r18 next
-            # #1; guide §1.2 "remove unnecessary passes"): the pre-r19
-            # shape read the rewritten files' live rows WIDE twice --
-            # once for the data rewrite (anti-join + union) and once
-            # for the change-set pre-image -- plus one source
-            # evaluation in each.  Here every pre row classifies in
-            # ONE pass against broadcast-LocalRelation markers:
-            #   key in matched-source set      -> update_preimage
-            #   key in delete set (not source) -> delete
-            #   otherwise                      -> carried data row
-            #     (_change_type NULL)
-            # and each source row emits its data copy and its change
-            # copy (update_postimage when matched, else insert) from
-            # ONE evaluation via an explode over the two change types.
-            # A single partitionBy-disposition staging write then
-            # splits data files from change files (same task writes
-            # both).  Row sets are exactly the old ones: for a live
-            # row of a rewritten file, "key matched" == "key in
-            # matched-source or delete set" (an unmatched delete key
-            # cannot appear in any candidate file), and NULL keys
-            # match no marker -- they stay data rows, as the anti-join
-            # kept them.  Data files carry _change_type all-NULL;
-            # snapshot reads project to the recorded schema (which
-            # omits it), so readers never see the column.
-            ct = "_change_type"
-            # ONE marker relation serves both sides (pre's _in_src and
-            # the source's matched test are the same key set), so the
-            # plan carries a single broadcast build the second join
-            # reuses (ReusedExchange) -- one fewer AQE broadcast job.
-            if mk_src is not None:
-                skm = _key_rel(mk_src, "_ck").withColumn(
-                    "_in_src", F.lit(True)
-                )
-            else:
-                skm = (
-                    mk_df.filter(F.col("_s"))
-                    .select(F.col("_k").alias("_ck"))
-                    .distinct()
-                    .withColumn("_in_src", F.lit(True))
-                )
-                if small_keys:
-                    skm = F.broadcast(skm)
-            tagged = affected_df.join(
-                skm, affected_df[key] == skm["_ck"], "left"
-            )
-            if dk_vals:
-                dkm = _key_rel(dk_vals, "_dck").withColumn(
-                    "_in_del", F.lit(True)
-                )
-                tagged = tagged.join(
-                    dkm, tagged[key] == F.col("_dck"), "left"
-                )
-                is_del = F.col("_in_del")
-            elif dk_df is not None:
-                dkm = dk_df.select(
-                    F.col("_dk").alias("_dck")
-                ).withColumn("_in_del", F.lit(True))
-                if small_keys:
-                    dkm = F.broadcast(dkm)
-                tagged = tagged.join(
-                    dkm, tagged[key] == F.col("_dck"), "left"
-                )
-                is_del = F.col("_in_del")
-            else:
-                is_del = F.lit(False)
-            cols = affected_df.columns
-            pre_branch = tagged.select(
-                *cols,
-                F.when(F.col("_in_src"), F.lit("update_preimage"))
-                .when(is_del, F.lit("delete"))
-                .alias(ct),
-            )
-            src_tagged = src_aligned.join(
-                skm, src_aligned[key] == skm["_ck"], "left"
-            )
-            src_branch = src_tagged.select(
-                *cols,
-                F.explode(F.array(
-                    F.lit(None).cast("string"),
-                    F.when(
-                        skm["_in_src"], F.lit("update_postimage")
-                    ).otherwise(F.lit("insert")),
-                )).alias(ct),
-            )
-            fused = pre_branch.unionByName(src_branch).coalesce(n_out)
-            new_files, new_stats, out_dir, chg_files = (
-                self._write_fused_cdc_files(fused, ct, new_version)
-            )
-            # recorded snapshot schema OMITS the hidden _change_type
-            # column the fused data files physically carry
-            from pyspark.sql.types import StructType
-
-            data_schema_json = StructType(
-                [f for f in fused.schema.fields if f.name != ct]
-            ).jsonValue()
-        else:
-            if mk_all is not None:
-                # Collected matched keys ride as a broadcast
-                # LocalRelation anti-join -- data, not expression (the
-                # isin() planning hazard above).  The LocalRelation
-                # build is driver rows already in hand, so the join
-                # re-evaluates no source subtree.  NULL-keyed target
-                # rows survive the anti (NULL never equals a key).
-                merged = affected_df.join(
-                    _key_rel(mk_all, "_mkk"),
-                    affected_df[key] == F.col("_mkk"),
-                    "left_anti",
-                ).unionByName(src_aligned).coalesce(n_out)
-            else:
-                # Bulk path (> _MATCHED_INLINE_MAX matched keys):
-                # anti-join against the pinned matched-key set;
-                # broadcast when the planner proved the touch keys
-                # bounded (count AND bytes), else AQE decides.
-                mk_keys = mk_df.select(F.col("_k").alias("_mkk")).distinct()
-                if small_keys:
-                    mk_keys = F.broadcast(mk_keys)
-                merged = affected_df.join(
-                    mk_keys, affected_df[key] == F.col("_mkk"), "left_anti"
-                ).unionByName(src_aligned).coalesce(n_out)
-            new_files, new_stats, out_dir = self._write_data_files(
-                merged, new_version
-            )
-            data_schema_json = merged.schema.jsonValue()
+        # lazy pin: the file collect is the action that fills it
+        pinned = matched.localCheckpoint(eager=False)
         try:
-            return self._commit(
-                new_version,
-                kept + new_files,
-                "merge",
-                {
-                    "parent": base_version,
-                    "files_kept": len(kept),
-                    "files_rewritten": len(rewritten),
-                    "files_written": len(new_files),
-                    **(
-                        {"change_files": chg_files} if chg_files else {}
-                    ),
-                    # skipping-on-merge evidence: candidate files the
-                    # match scan actually READ (vs len(files) total),
-                    # and which bloom-probe path pruned them.
-                    "files_probed": len(candidates),
-                    **(
-                        {"bloom_probe": bloom_mode}
-                        if bloom_mode is not None
-                        else {}
-                    ),
-                    "delete_keys": (
-                        n_dk
-                        if n_dk is not None
-                        else (
-                            dk_df.count()
-                            if dk_df is not None
-                            else len(dk_vals)
-                        )
-                    ),
-                    **({"app_meta": meta} if meta is not None else {}),
-                    "txn": self._next_txn(base_version, meta),
-                    "file_stats": {
-                        **self._carried_stats(base_version, kept),
-                        **new_stats,
-                    },
-                    "schema": data_schema_json,
-                },
-            )
-        except ConcurrentWriteError:
-            # Loser cleanup: its data/change dirs were never referenced
-            # by any commit, so removing them cannot affect readers.
-            import shutil
-
-            shutil.rmtree(out_dir, ignore_errors=True)
-            if chg_files:
-                shutil.rmtree(
-                    os.path.dirname(chg_files[0]), ignore_errors=True
-                )
-            # Classify for the rebase loop: overlap between what we
-            # meant to rewrite and what the winner(s) removed means
-            # possibly the same keys -- not safely rebasable.
-            head = self.version()
-            removed = set(self.files(base_version)) - set(self.files(head))
-            clash = removed & set(rewritten)
-            if clash:
-                raise ConcurrentMergeConflictError(
-                    f"concurrent commit rewrote {len(clash)} file(s) this "
-                    f"merge also targets (e.g. "
-                    f"{os.path.basename(sorted(clash)[0])}); possible "
-                    "write-write key overlap -- not rebasing"
-                ) from None
+            files = pinned.select("_file").distinct().collect()
+        except Exception:
+            _release_pinned(pinned)
             raise
-        finally:
-            # eager release of the bulk-path pinned matched keys
-            # (ADVICE r18 #3); every consumer ran in the writes above
-            if mk_df is not None:
-                _release_pinned(mk_df)
+        return {r["_file"] for r in files}, None, pinned
 
     def _dv_positions_for(
         self,
@@ -3614,44 +3366,49 @@ class CowTable:
         key: str,
         touch_keys: DataFrame,
         want_rows: bool = False,
-    ) -> tuple[dict, int, "DataFrame | None"]:
+    ) -> tuple[dict, int, "DataFrame | None", list | None]:
         """Dead-position bitmaps for every LIVE row of ``candidates``
-        whose ``key`` appears in ``touch_keys``: ``({basename: int
-        bitmap}, rows matched, matched rows or None)``.  Already-dead
-        rows are filtered first (idempotent re-deletes mark nothing
-        and count nothing).  The per-file position lists aggregate
-        executor-side; only the O(files) grouped rows come back, each
-        sized by ITS dead-row count, guarded by ``_DV_COLLECT_MAX`` --
-        a mutation past that is bulk-sized and must use the
-        copy-on-write strategy, which this error says verbatim.
+        whose ``key`` appears in ``touch_keys``: ``({basename: bitmap},
+        rows matched, pinned matched rows or None, matched (key, _s)
+        pairs or None)``.  Already-dead rows are filtered first
+        (idempotent re-deletes mark nothing and count nothing).  The
+        per-file position lists aggregate executor-side; only the
+        O(files) grouped rows come back, each sized by ITS dead-row
+        count, guarded by ``_DV_COLLECT_MAX`` -- a mutation past that is
+        bulk-sized and must use the copy-on-write strategy, which this
+        error says verbatim.
 
-        ``want_rows`` (r19): pin the matched rows WIDE (all snapshot
-        columns) instead of just (file, position), and return the
-        pinned frame -- the change-feed writers read their pre-image
-        straight from it, so a CDF dv-delete / mor merge scans the
-        candidate files ONCE (the position harvest) instead of twice
-        (position harvest narrow + change pre-image wide)."""
+        ``want_rows`` (the change feed is on): pin the matched rows
+        WIDE -- all snapshot columns plus ``_k``/``_s`` -- and return
+        the pinned frame as the classifier's pre-image, so a CDF dv
+        delete or mor merge scans its candidates ONCE; the same grouped
+        collect also returns the matched (key, ``_s``) pairs (the mor
+        analogue of cow's detection triples), None past
+        ``_MATCHED_INLINE_MAX`` (the markers then derive from the pin).
+        The caller owns the returned pin and its release."""
         if not candidates:
-            return {}, 0, None
+            return {}, 0, None, [] if want_rows else None
         live = self._read_files(
             candidates, schema, dv_map, file_col="__dvf", pos_col="__dvp"
         )
-        # Pinned eagerly so the cap-guard count and the grouped collect
-        # below share ONE scan+join of the candidate files (r18: the
-        # two actions otherwise each re-read every candidate -- the
-        # dominant cost of a DV mutation is exactly that scan).  The
-        # pinned frame is (file id, row position) -- plus the full row
-        # under want_rows -- bounded in the legitimate case by the
-        # delta's match count.
-        names = [f.name for f in schema.fields]
-        sel = (names if want_rows else []) + ["__dvf", "__dvp"]
+        # Pinned so the cap-guard count and the grouped collect below
+        # share ONE scan+join of the candidate files (the two actions
+        # otherwise each re-read every candidate -- the dominant cost
+        # of a DV mutation is exactly that scan).  The pin is lazy and
+        # the count is the action that fills it: a plain RDD count, one
+        # job with no aggregation exchange (a DataFrame count() adds a
+        # second, AQE-staged job).  Bounded in the legitimate case by
+        # the delta's match count.
+        sel = ["__dvf", "__dvp"]
+        if want_rows:
+            sel += [*schema.fieldNames(), F.col(key).alias("_k"), "_s"]
         matched = (
-            live.join(touch_keys, live[key] == F.col("_mk"), "left_semi")
+            live.join(touch_keys, live[key] == F.col("_mk"), "inner")
             .select(*sel)
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
         try:
-            n = matched.count()
+            n = matched._jdf.queryExecution().toRdd().count()
             if n > _DV_COLLECT_MAX:
                 raise ValueError(
                     f"{n} matched rows exceed the deletion-vector cap "
@@ -3659,323 +3416,209 @@ class CowTable:
                     "use strategy='cow' / mode='cow' (file rewrite) instead"
                 )
             updates: dict = {}
-            if n:
-                for r in (
-                    matched.groupBy("__dvf")
-                    .agg(F.collect_list("__dvp").alias("ps"))
-                    .collect()
-                ):
-                    updates[r["__dvf"]] = _dv_build(int(p) for p in r["ps"])
+            pairs: list | None = [] if want_rows else None
+            aggs = [F.collect_list("__dvp").alias("ps")]
+            if want_rows:
+                aggs.append(F.collect_set(F.struct("_k", "_s")).alias("ks"))
+            for r in (
+                matched.groupBy("__dvf").agg(*aggs).collect() if n else []
+            ):
+                updates[r["__dvf"]] = _dv_build(int(p) for p in r["ps"])
+                if want_rows:
+                    pairs.extend(r["ks"])
         except Exception:
             _release_pinned(matched)
             raise
         if not want_rows:
             _release_pinned(matched)
-            return updates, n, None
-        # want_rows: the caller owns the pinned frame (and its eager
-        # release -- ADVICE r18 #3) until its change write has run
-        return updates, n, matched
+            return updates, n, None, None
+        if len(pairs) > _MATCHED_INLINE_MAX:
+            pairs = None
+        return updates, n, matched, pairs
 
-    def _finish_merge_mor(
-        self, source: DataFrame, key: str, dk_vals: list,
-        dk_df: DataFrame | None, meta: dict | None, evolve_schema: bool,
-        base_version: int, snapshot_files: list[str],
-        touch_keys: DataFrame, candidates: list[str],
-        bloom_mode: str | None, n_touch: int | None = None,
-        n_dk: int | None = None,
-    ) -> dict:
-        """Merge-on-read back half of :meth:`_merge_attempt`: instead
-        of rewriting affected files, their matched/deleted LIVE rows
-        become dead positions in the deletion-vector sidecar and every
-        source row lands in new files -- zero data files rewritten.
-        Deletes are implicit: a delete key is a touch key, so its
-        positions die, and (matching cow's contract) a key in both
-        ``deletes`` and ``source`` ends up as the source row.  With
-        the change feed on, the position harvest pins the matched rows
-        wide and the change pre-image reads from the pinned frame --
-        one candidate scan per CDF mor merge, not two (r19)."""
-        snap_schema = self._snapshot_schema(base_version)
-        dv_map = self._dv_map(self._commit_doc(base_version))
-        feed = self._change_feed_enabled(base_version)
-        dv_updates, rows_matched, pre_pinned = self._dv_positions_for(
-            candidates, snap_schema, dv_map, key, touch_keys,
-            want_rows=feed,
-        )
-        # Same projection contract as cow: strict mode demands every
-        # table column (deterministic error, names included); evolve
-        # mode NULL-fills both directions and appends source-only
-        # columns to the schema.  Snapshot columns cast to their
-        # recorded types -- the coercion cow gets implicitly from its
-        # full-outer CASE projection.
-        src_cols = set(source.columns)
-        missing = [f for f in snap_schema.fields if f.name not in src_cols]
+    def _project_source(
+        self, source: DataFrame, snap_schema, evolve_schema: bool,
+        base_version: int,
+    ) -> DataFrame:
+        """The one projection of a merge source onto the table layout:
+        table columns in table order, CAST to their recorded types (a
+        merge never retypes the table; Spark runs with ANSI on, so a
+        value that does not fit raises).  Strict mode: the schema is a
+        contract -- a source missing a table column fails HERE,
+        deterministically, with the columns named (also the outcome
+        when a rebase finds a concurrently-widened schema: Delta's
+        MetadataChanged analogue).  Evolve mode: table columns absent
+        from the source NULL-fill and source-only columns append, so
+        two concurrent evolving merges rebase into the union schema."""
+        have = set(source.columns)
+        names = snap_schema.fieldNames()
+        missing = [n for n in names if n not in have]
         if missing and not evolve_schema:
             raise ValueError(
-                f"merge source is missing table column(s) "
-                f"{[f.name for f in missing]} of {self.path} (snapshot "
-                f"v{base_version}); pass evolve_schema=True to NULL-fill, "
-                "or align the source"
+                f"merge source is missing table column(s) {missing} of "
+                f"{self.path} (snapshot v{base_version}); pass "
+                "evolve_schema=True to NULL-fill, or align the source"
             )
-        src_proj = source
-        for fld in missing:
-            src_proj = src_proj.withColumn(
-                fld.name, F.lit(None).cast(fld.dataType)
-            )
-        out_cols = [
-            F.col(f.name).cast(f.dataType).alias(f.name)
+        cols = [
+            (F.col(f.name) if f.name in have else F.lit(None))
+            .cast(_nullable(f.dataType))
+            .alias(f.name)
             for f in snap_schema.fields
         ]
         if evolve_schema:
-            snap_names = {f.name for f in snap_schema.fields}
-            out_cols += [
-                F.col(f.name)
-                for f in source.schema.fields
-                if f.name not in snap_names
-            ]
-        out_df = src_proj.select(*out_cols)
+            cols += [F.col(c) for c in source.columns if c not in names]
+        return source.select(*cols)
+
+    def _key_rel(self, rows, ktype) -> DataFrame:
+        """Driver-held ``(key, _s)`` rows as one broadcast LocalRelation
+        ``(_mk, _s)``, a row per distinct key with its flags OR-ed.
+        Data, not an ``isin()`` literal: a multi-thousand-literal In
+        costs seconds of driver planning per action, while a broadcast
+        join against local rows keeps the plan small and re-evaluates
+        no subtree."""
+        from pyspark.sql.types import BooleanType, StructField, StructType
+
+        return F.broadcast(self.spark.createDataFrame(
+            [(k, bool(s)) for k, s in _by_key(rows)],
+            StructType([
+                StructField("_mk", ktype),
+                StructField("_s", BooleanType()),
+            ]),
+        ))
+
+    @staticmethod
+    def _classify(
+        pre: DataFrame | None, src: DataFrame | None,
+        markers: DataFrame | None, key: str, feed: bool,
+    ) -> DataFrame | None:
+        """The one row classifier of every keyed mutation (Delta CDF row
+        types).  ``pre`` is the pre-image -- cow: the rewritten files'
+        live rows; mor/dv: the pinned matched rows -- and ``src`` the
+        projected source (None for a delete); ``markers`` ``(_mk, _s)``
+        holds every MATCHED key, ``_s`` true for a source key.
+
+        * pre row whose key is a matched source key -> ``update_preimage``
+        * pre row whose key is a matched delete-only key -> ``delete``
+          (delete-then-upsert ends as an update)
+        * any other pre row -> NULL: a carried data row (a copy-on-write
+          rewrite is not a logical change)
+        * every source row -> a data row (NULL) plus, with the feed on,
+          a change copy from the SAME evaluation (an explode over the
+          two types): ``update_postimage`` when its key matched, else
+          ``insert`` (NULL keys match nothing and always insert)
+
+        With the feed off it is the same plan with change emission off:
+        only the NULL-tagged pre rows are kept and source rows emit
+        once, so the output is exactly (unmatched live rows) + (every
+        source row).  Matched keys take the source row WHOLESALE, so a
+        DUPLICATE-key target set collapses to the source row (the mor
+        behaviour too).  Markers are broadcast-sized by construction,
+        so the wide pre-image streams scan -> tag -> write with no
+        exchange.  Returns None when there is nothing to write."""
+        ct = "_change_type"
+        parts = []
+        if pre is not None:
+            tagged = pre.join(markers, pre[key] == markers["_mk"], "left")
+            tagged = tagged.select(
+                *pre.columns,
+                F.when(F.col("_s"), F.lit("update_preimage"))
+                .when(F.col("_mk").isNotNull(), F.lit("delete"))
+                .alias(ct),
+            )
+            if not feed:
+                tagged = tagged.filter(F.col(ct).isNull()).drop(ct)
+            parts.append(tagged)
+        if src is not None:
+            if feed:
+                src = src.join(
+                    markers, src[key] == markers["_mk"], "left"
+                ).select(
+                    *src.columns,
+                    F.explode(F.array(
+                        F.lit(None).cast("string"),
+                        F.when(F.col("_s"), F.lit("update_postimage"))
+                        .otherwise(F.lit("insert")),
+                    )).alias(ct),
+                )
+            parts.append(src)
+        if not parts:
+            return None
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p, allowMissingColumns=True)
+        return out
+
+    def _commit_mutation(
+        self, op: str, base_version: int, kept: list[str],
+        out: DataFrame | None, feed: bool, touched: set, stats: dict,
+        meta: dict | None, pinned: DataFrame | None,
+    ) -> dict:
+        """The one write-and-commit tail of every keyed mutation: write
+        ``out`` (the classified rows; None = nothing to write) with
+        :meth:`_write_files`, then commit ``kept`` + the new data files
+        with the common stats around the caller's ``stats``.
+
+        On ANY failure before the commit links -- a lost race, the DV
+        accumulation guardrail refusing inside :meth:`_commit`, a
+        failed write -- every directory this attempt wrote is removed
+        (never referenced by a commit, so invisible to readers, and the
+        raw change-feed glob never sees a loser's rows).  A lost race
+        is then classified for the rebase loop: a winner that REMOVED a
+        file this attempt ``touched`` (rewrote, or marked rows dead in)
+        may hold overlapping keys -- surfaced as
+        :class:`ConcurrentMergeConflictError`, never rebased; winners
+        that only added or rewrote other files rebase fine.  ``pinned``
+        (the pinned frame the plan read, if any) is released in every
+        case."""
+        import shutil
+
         new_version = base_version + 1
-        chg_files: list[str] = []
-        if feed:
-            # pre-image = the matched live rows already pinned by the
-            # position harvest (delta-sized); no second candidate scan
-            pre = (
-                pre_pinned
-                if pre_pinned is not None
-                else self._read_files([], snap_schema, None)
-            )
-            chg_files = self._write_change_files(
-                self._change_set(
-                    pre, out_df, key, dk_vals, dk_df,
-                    small_keys=(
-                        n_touch is not None
-                        and n_touch <= _MERGE_BROADCAST_MAX_KEYS
-                    ),
-                ),
-                new_version,
-            )
-        new_files, new_stats, out_dir = self._write_data_files(
-            out_df, new_version
-        )
+        dirs: list[str] = []
         try:
+            new_files: list[str] = []
+            new_stats: dict = {}
+            chg_files: list[str] = []
+            if out is not None:
+                new_files, new_stats, chg_files, dirs = self._write_files(
+                    out, new_version, feed
+                )
             return self._commit(
                 new_version,
-                snapshot_files + new_files,
-                "merge",
+                kept + new_files,
+                op,
                 {
                     "parent": base_version,
-                    "strategy": "mor",
-                    "files_kept": len(snapshot_files),
-                    "files_rewritten": 0,
+                    "files_kept": len(kept),
                     "files_written": len(new_files),
-                    "files_probed": len(candidates),
-                    "dv_files_updated": len(dv_updates),
-                    "rows_dv_deleted": rows_matched,
-                    **(
-                        {"change_files": chg_files} if chg_files else {}
-                    ),
-                    **(
-                        {"bloom_probe": bloom_mode}
-                        if bloom_mode is not None
-                        else {}
-                    ),
-                    "delete_keys": (
-                        n_dk
-                        if n_dk is not None
-                        else (
-                            dk_df.count()
-                            if dk_df is not None
-                            else len(dk_vals)
-                        )
-                    ),
+                    **stats,
+                    **({"change_files": chg_files} if chg_files else {}),
                     **({"app_meta": meta} if meta is not None else {}),
                     "txn": self._next_txn(base_version, meta),
                     "file_stats": {
-                        **self._carried_stats(base_version, snapshot_files),
+                        **self._carried_stats(base_version, kept),
                         **new_stats,
                     },
-                    "schema": out_df.schema.jsonValue(),
-                    "dv_updates": dv_updates,
                 },
             )
-        except (ConcurrentWriteError, ValueError) as exc:
-            import shutil
-
-            shutil.rmtree(out_dir, ignore_errors=True)
-            if chg_files:
-                shutil.rmtree(
-                    os.path.dirname(chg_files[0]), ignore_errors=True
-                )
-            if isinstance(exc, ValueError):
-                # The DV accumulation guardrail refused the commit
-                # inside _commit/_maintain_dv -- nothing was linked,
-                # but this path had already written data/change files;
-                # without the cleanup above every cap refusal would
-                # leak an orphan changes/ dir into the raw
-                # committed_only=False feed (ADVICE r16).
-                raise
-            # A winner that REMOVED a file we marked positions in
-            # rewrote it -- our positions describe a dead file and its
-            # keys may overlap ours: surface, don't rebase.  Winners
-            # that only added/rewrote other files rebase fine (the
-            # retry recomputes everything from the new head).
-            head = self.version()
-            removed = {
-                os.path.basename(f)
-                for f in set(self.files(base_version)) - set(self.files(head))
-            }
-            clash = removed & set(dv_updates)
-            if clash:
-                raise ConcurrentMergeConflictError(
-                    f"concurrent commit rewrote {len(clash)} file(s) this "
-                    f"mor-merge marked rows dead in (e.g. "
-                    f"{sorted(clash)[0]}); possible write-write key "
-                    "overlap -- not rebasing"
-                ) from None
+        except Exception as exc:
+            for d in dirs:
+                shutil.rmtree(d, ignore_errors=True)
+            if isinstance(exc, ConcurrentWriteError):
+                head_files = set(self.files(self.version()))
+                clash = touched & {
+                    os.path.basename(f)
+                    for f in set(self.files(base_version)) - head_files
+                }
+                if clash:
+                    raise ConcurrentMergeConflictError(
+                        f"concurrent commit rewrote {len(clash)} file(s) "
+                        f"this {op} also touches (e.g. {sorted(clash)[0]}); "
+                        "possible write-write key overlap -- not rebasing"
+                    ) from None
             raise
-
-    def _change_set(
-        self,
-        pre: DataFrame,
-        src_proj: DataFrame | None,
-        key: str,
-        dk_vals: list,
-        dk_df: DataFrame | None,
-        small_keys: bool = False,
-        sk_vals: list | None = None,
-        sk_df: DataFrame | None = None,
-    ) -> DataFrame:
-        """The row-level change set of one mutation commit (Delta CDF
-        row types): ``pre`` is the affected slice's LIVE pre-image
-        rows, ``src_proj`` the source projected onto the output
-        layout (None for a pure delete).
-
-        * pre row whose key is a source key  -> ``update_preimage``
-        * pre row whose key is a delete key (and not a source key --
-          delete-then-upsert ends as an update) -> ``delete``
-        * source row whose key exists in the affected slice
-          -> ``update_postimage`` (matched keys only ever live there)
-        * any other source row -> ``insert`` (NULL keys always insert)
-
-        Untouched rows of rewritten files classify into none of these
-        and drop out -- a copy-on-write rewrite is not a logical
-        change.
-
-        Plan shape (r18): the pre-image slice is the REWRITTEN FILES'
-        live rows -- table-scale, not delta-scale -- and the r17 form
-        referenced it in four subtrees (preimage semi-join, delete
-        semi+anti, and the tk distinct twice), so one CDF merge
-        re-scanned every rewritten file four times wide.  Both sides
-        now classify in ONE pass each -- a single when()-typed
-        projection per side -- leaving one wide scan of pre and one
-        scan of the source.  Row set is identical: the key sets are
-        distinct (markers never duplicate) and the when() precedence
-        mirrors the old union semantics (a key in both source and
-        deletes feeds as an update, NULL keys match nothing and
-        classify as before).
-
-        ``sk_vals`` / ``sk_df`` (r18, opt round): the MATCHED source
-        keys -- source keys that exist among the pre-image's live rows
-        -- which the cow merge's detection collect produces for free
-        (driver literals below ``_MATCHED_INLINE_MAX``, one pinned
-        frame past it).  They replace two table-scale subtrees at
-        once: the ``_in_src`` marker only ever fires on a matched key
-        (a pre row whose key is a source key IS a match), and tk --
-        the postimage/insert classifier, pre keys ∩ source keys -- is
-        exactly this set, so the old table-scale distinct of every
-        rewritten-file key (and even the key-only pre scan) disappears
-        entirely.  With collected keys the whole change set is scan
-        -> broadcast-LocalRelation markers -> union.  ``small_keys``: the
-        caller proved the key sets broadcast-sized, so the fallback
-        marker joins carry an explicit broadcast hint and the wide pre
-        scan streams through with no exchange."""
-        ct = "_change_type"
-        if src_proj is None:
-            return pre.withColumn(ct, F.lit("delete"))
-        cols = pre.columns
-
-        def _b(df: DataFrame) -> DataFrame:
-            return F.broadcast(df) if small_keys else df
-
-        def _rel(vals: list, name: str) -> DataFrame:
-            # driver-held keys as a LocalRelation, NOT an isin()
-            # literal: a multi-thousand-literal In costs seconds of
-            # planning per action (see _finish_merge_attempt), while
-            # a broadcast join against local rows keeps the plan
-            # small and evaluates no subtree.
-            from pyspark.sql.types import StructField, StructType
-
-            return F.broadcast(
-                self.spark.createDataFrame(
-                    [(v,) for v in vals],
-                    StructType(
-                        [StructField(name, src_proj.schema[key].dataType)]
-                    ),
-                )
-            )
-
-        # pre side: carried rows classify to NULL and drop out
-        tagged = pre
-        if sk_vals is not None:
-            sk = _rel(sk_vals, "_ck").withColumn("_in_src", F.lit(True))
-        else:
-            sk = (
-                sk_df.withColumnRenamed("_sk", "_ck")
-                if sk_df is not None
-                else src_proj.select(F.col(key).alias("_ck")).distinct()
-            ).withColumn("_in_src", F.lit(True))
-            sk = _b(sk)
-        tagged = tagged.join(sk, pre[key] == F.col("_ck"), "left")
-        in_src = F.col("_in_src")
-        if dk_vals:
-            dkm = _rel(dk_vals, "_dck").withColumn("_in_del", F.lit(True))
-            tagged = tagged.join(
-                dkm, tagged[key] == F.col("_dck"), "left"
-            )
-            is_del = F.col("_in_del")
-        elif dk_df is not None:
-            dkm = dk_df.select(
-                F.col("_dk").alias("_dck")
-            ).withColumn("_in_del", F.lit(True))
-            tagged = tagged.join(
-                _b(dkm), tagged[key] == F.col("_dck"), "left"
-            )
-            is_del = F.col("_in_del")
-        else:
-            is_del = F.lit(False)
-        pre_type = (
-            F.when(in_src, F.lit("update_preimage"))
-            .when(is_del, F.lit("delete"))
-        )
-        pre_part = (
-            tagged.withColumn(ct, pre_type)
-            .filter(F.col(ct).isNotNull())
-            .select(*cols, ct)
-        )
-        # source side: _in_tbl(key) == key matched a live pre row
-        if sk_vals is not None:
-            tk = _rel(sk_vals, "_ck").withColumn("_in_tbl", F.lit(True))
-        else:
-            tk = (
-                sk_df.withColumnRenamed("_sk", "_ck")
-                if sk_df is not None
-                else pre.select(F.col(key).alias("_ck")).join(
-                    _b(src_proj.select(F.col(key).alias("_ck")).distinct()),
-                    "_ck",
-                    "left_semi",
-                ).distinct()
-            ).withColumn("_in_tbl", F.lit(True))
-            tk = _b(tk)
-        src_part = (
-            src_proj.join(tk, src_proj[key] == F.col("_ck"), "left")
-            .withColumn(
-                ct,
-                F.when(
-                    F.col("_in_tbl"), F.lit("update_postimage")
-                ).otherwise(F.lit("insert")),
-            )
-            .select(*src_proj.columns, ct)
-        )
-        return pre_part.unionByName(src_part, allowMissingColumns=True)
+        finally:
+            if pinned is not None:
+                _release_pinned(pinned)
 
     def read_changes(
         self, from_version: int, to_version: int | None = None
@@ -4043,206 +3686,3 @@ class CowTable:
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
         return out
-
-    def delete(
-        self,
-        key: str,
-        values=None,
-        deletes: DataFrame | None = None,
-        mode: str = "dv",
-        retries: int = 0,
-        meta: dict | None = None,
-        bloom_probe: str | None = None,
-    ) -> dict:
-        """``DELETE FROM ... WHERE key IN (...)``: remove every row
-        whose ``key`` is in ``values`` (a scalar or list) or in
-        ``deletes`` (any frame carrying a ``key`` column).
-
-        ``mode="dv"`` (default, merge-on-read): NO data file is
-        rewritten -- matched rows are marked dead by row position in
-        the commit's deletion-vector sidecar, an O(batch + positions)
-        metadata commit.  At 100 TB a GDPR-style scattered delete (a
-        few thousand keys spread across thousands of files) costs
-        kilobytes of sidecar instead of rewriting terabytes; the
-        candidate scan itself is range+bloom pruned like merge's
-        (:meth:`_candidate_files`).  Dead rows stay physically present
-        until :meth:`compact` materializes the vectors; every reader
-        filters them by position meanwhile.  Bounded by
-        ``_DV_COLLECT_MAX`` positions per commit -- bulk deletes must
-        use ``mode="cow"``.
-
-        ``mode="cow"``: delegate to :meth:`merge` with an empty source
-        (rewrite the matched files without the rows -- the
-        read-optimized form).
-
-        ``retries``/``meta``/``bloom_probe``: as :meth:`merge`;
-        rebase conflicts classify the same way (a concurrent rewrite
-        of a file this delete marked dead raises
-        :class:`ConcurrentMergeConflictError`)."""
-        if mode not in ("dv", "cow"):
-            raise ValueError(f"mode must be 'dv' or 'cow', got {mode!r}")
-        if (values is None) == (deletes is None):
-            raise ValueError("pass exactly one of values= or deletes=")
-        head = self.version()
-        if head < 0:
-            raise FileNotFoundError(f"no CowTable at {self.path}")
-        snap_schema = self._snapshot_schema(head)
-        envelope = None
-        probe_rows = None
-        if values is not None:
-            vals = (
-                list(values)
-                if isinstance(values, (list, tuple, set))
-                else [values]
-            )
-            ktype = snap_schema[key].dataType
-            from pyspark.sql.types import StructField, StructType
-
-            deletes = self.spark.createDataFrame(
-                [(v,) for v in vals],
-                StructType([StructField(key, ktype)]),
-            )
-            # The touch keys are IN HAND as driver literals: derive the
-            # range-prune envelope and the (bounded) bloom probe set
-            # here instead of running one agg job + one limit-collect
-            # job to re-learn them from the frame just built (r18;
-            # the GDPR point-delete shape pays two fewer jobs per
-            # commit).  NULLs never match a join, so dropping them
-            # keeps the envelope exact.
-            nn = [v for v in vals if v is not None]
-            if nn:
-                try:
-                    envelope = (min(nn), max(nn))
-                except TypeError:
-                    envelope = None  # mixed/unorderable: fall back
-            if len(nn) <= _BLOOM_PRUNE_MAX_KEYS:
-                probe_rows = [{"_mk": v} for v in nn]
-        if mode == "cow":
-            empty = self.spark.createDataFrame([], snap_schema)
-            return self.merge(
-                empty, key, deletes=deletes, retries=retries, meta=meta,
-                bloom_probe=bloom_probe, touch_envelope=envelope,
-            )
-        dk = (
-            deletes.select(F.col(key).alias("_mk"))
-            .filter(F.col("_mk").isNotNull())
-            .distinct()
-        )
-        attempt = 0
-        while True:
-            try:
-                return self._delete_dv_attempt(
-                    key, dk, meta, bloom_probe,
-                    touch_envelope=envelope, probe_rows=probe_rows,
-                )
-            except ConcurrentMergeConflictError:
-                raise
-            except ConcurrentWriteError:
-                if attempt >= retries:
-                    raise
-                attempt += 1
-
-    def _delete_dv_attempt(
-        self, key: str, touch_keys: DataFrame, meta: dict | None,
-        bloom_probe: str | None,
-        touch_envelope: tuple | None = None,
-        probe_rows: list | None = None,
-    ) -> dict:
-        """One optimistic attempt of a deletion-vector delete: prune
-        candidates, harvest matched live positions, commit the SAME
-        file list with an updated sidecar -- nothing is written to the
-        data plane at all (files_written = 0)."""
-        base_version = self.version()
-        snapshot_files = self.files(base_version)
-        candidates, bloom_mode, _, touch_rows = self._candidate_files(
-            touch_keys, key, base_version, bloom_probe,
-            probe_rows=probe_rows, touch_envelope=touch_envelope,
-        )
-        snap_schema = self._snapshot_schema(base_version)
-        if touch_rows is not None:
-            # bounded batch: the collected keys become a broadcast
-            # LocalRelation, so the position harvest never re-evaluates
-            # the caller's deletes plan (r19)
-            from pyspark.sql.types import StructField, StructType
-
-            touch_keys = F.broadcast(self.spark.createDataFrame(
-                [(r["_mk"],) for r in touch_rows],
-                StructType([
-                    StructField("_mk", snap_schema[key].dataType),
-                ]),
-            ))
-        dv_map = self._dv_map(self._commit_doc(base_version))
-        feed = self._change_feed_enabled(base_version)
-        dv_updates, rows_deleted, pre_pinned = self._dv_positions_for(
-            candidates, snap_schema, dv_map, key, touch_keys,
-            want_rows=feed,
-        )
-        chg_files: list[str] = []
-        if feed:
-            # pre-image straight from the pinned matched rows: a CDF
-            # dv delete scans its candidates ONCE, not twice (r19)
-            pre = (
-                pre_pinned
-                if pre_pinned is not None
-                else self._read_files([], snap_schema, None)
-            )
-            chg_files = self._write_change_files(
-                self._change_set(pre, None, key, [], None),
-                base_version + 1,
-            )
-        try:
-            return self._commit(
-                base_version + 1,
-                snapshot_files,
-                "delete",
-                {
-                    "parent": base_version,
-                    "strategy": "dv",
-                    "files_kept": len(snapshot_files),
-                    "files_rewritten": 0,
-                    "files_written": 0,
-                    "files_probed": len(candidates),
-                    "dv_files_updated": len(dv_updates),
-                    "rows_dv_deleted": rows_deleted,
-                    **(
-                        {"change_files": chg_files} if chg_files else {}
-                    ),
-                    **(
-                        {"bloom_probe": bloom_mode}
-                        if bloom_mode is not None
-                        else {}
-                    ),
-                    **({"app_meta": meta} if meta is not None else {}),
-                    "txn": self._next_txn(base_version, meta),
-                    "file_stats": self._carried_stats(
-                        base_version, snapshot_files
-                    ),
-                    "schema": snap_schema.jsonValue(),
-                    "dv_updates": dv_updates,
-                },
-            )
-        except (ConcurrentWriteError, ValueError) as exc:
-            if chg_files:
-                import shutil
-
-                shutil.rmtree(
-                    os.path.dirname(chg_files[0]), ignore_errors=True
-                )
-            if isinstance(exc, ValueError):
-                # DV-cap refusal (accumulation guardrail): no commit
-                # was linked; the change files written above must not
-                # outlive it as orphans (ADVICE r16).
-                raise
-            head = self.version()
-            removed = {
-                os.path.basename(f)
-                for f in set(self.files(base_version)) - set(self.files(head))
-            }
-            clash = removed & set(dv_updates)
-            if clash:
-                raise ConcurrentMergeConflictError(
-                    f"concurrent commit rewrote {len(clash)} file(s) this "
-                    f"delete marked rows dead in (e.g. {sorted(clash)[0]}); "
-                    "possible write-write key overlap -- not rebasing"
-                ) from None
-            raise

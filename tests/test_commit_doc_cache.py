@@ -53,3 +53,51 @@ def test_doc_cache_missing_version_raises(spark, tmp_path):
     )
     with pytest.raises(OSError):
         t._commit_doc(7)
+
+
+def test_doc_cache_eviction_is_thread_safe(tmp_path):
+    """The memo is process-wide, so threads sharing tables race its
+    evict step: without the lock, two threads that both see the cache
+    full pop the same oldest key and one raises ``KeyError`` (or
+    ``RuntimeError`` when the dict changes mid-iteration).  8 threads
+    cycle through more versions than ``_DOC_CACHE_MAX`` with the GIL
+    switch interval lowered so the interleaving actually happens."""
+    import json
+    import os
+    import threading
+
+    from data_wrangling_osm_xml_with_python_into_mongodb_spark.sources import (
+        cow_table as ct,
+    )
+
+    n_versions = 4 * ct._DOC_CACHE_MAX
+    t = CowTable(None, str(tmp_path / "hammer"))
+    os.makedirs(os.path.join(t.path, "_log"))
+    for v in range(n_versions):
+        with open(ct._commit_path(t.path, v), "w") as f:
+            json.dump({"version": v, "op": "merge", "files": []}, f)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    errors: list = []
+    start = threading.Barrier(8)
+
+    def hammer(seed: int):
+        start.wait()
+        try:
+            for i in range(300):
+                v = (seed * 7 + i) % n_versions
+                assert t._commit_doc(v)["version"] == v
+        except Exception as exc:  # noqa: BLE001 -- collected, re-raised below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=hammer, args=(s,)) for s in range(8)]
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert len(ct._DOC_CACHE) <= ct._DOC_CACHE_MAX

@@ -1,22 +1,25 @@
-"""The r19 FUSED change-feed write (sources/cow_table.py
-``_write_fused_cdc_files``): a change-feed cow merge reads the
-rewritten files' live rows ONCE and one partitioned staging write
-emits data files and change files together.  Invariants pinned here:
+"""The one mutation write path of sources/cow_table.py: every keyed
+mutation (cow merge, mor merge, dv delete) classifies its rows once
+(``CowTable._classify``), writes them with one writer
+(``CowTable._write_files``) and commits through one tail
+(``CowTable._commit_mutation``).  On a change-feed table one
+partitioned staging write emits data files and change files together
+from a single evaluation.  Invariants pinned here:
 
 * data files physically carry a hidden all-NULL ``_change_type``
   column, and every reader surface (snapshot read, recorded schema)
   projects it away;
-* the per-merge Spark JOB budget: the fused shape runs the whole CDF
-  merge in a bounded number of driver jobs (the pre-r19 shape ran
-  ~15 at this stage count -- VERDICT r18 next #3);
+* the per-mutation Spark JOB budget, for every strategy with the feed
+  off and on, and for the dv delete;
 * the bulk matched-key path (> _MATCHED_INLINE_MAX triples) pins the
   matched set as a localCheckpoint instead of driver literals, and
-  still produces the exact feed (VERDICT r18 next #7);
-* a losing racer's fused output (data dir, change dir, staging dir)
-  is cleaned up;
-* the change write's file sizing degrades to coalesce(8), not
-  shuffle-partition scatter, when a caller-built session has AQE off
-  (ADVICE r18 #4).
+  still produces the exact feed;
+* every pinned frame is released: the persistent-RDD count returns to
+  its baseline after each mutation;
+* a losing racer's output (data dir, change dir, staging dir) is
+  cleaned up;
+* change files are bounded by the mutation's coalesce, not
+  shuffle-partition scatter, when a caller-built session has AQE off.
 """
 
 from __future__ import annotations
@@ -39,14 +42,14 @@ from data_wrangling_osm_xml_with_python_into_mongodb_spark.sources.cow_table imp
 )
 
 
-def _mk(spark, tmp_path, name, n=40, parts=2):
+def _mk(spark, tmp_path, name, n=40, parts=2, change_feed=True):
     df = (
         spark.range(n)
         .selectExpr("id AS k", "id * 10 AS v")
         .repartition(parts)
     )
     return CowTable.create(
-        spark, str(tmp_path / name), df, change_feed=True
+        spark, str(tmp_path / name), df, change_feed=change_feed
     )
 
 
@@ -59,13 +62,14 @@ def _feed(t, lo, hi=None):
     )
 
 
-def _merge_once(spark, t):
+def _merge_once(spark, t, strategy="cow"):
     """The canonical mixed mutation: update k=5, insert k=100,
     delete k=7."""
     t.merge(
         spark.createDataFrame([(5, 555), (100, 1000)], "k long, v long"),
         "k",
         deletes=spark.createDataFrame([(7,)], "k long"),
+        strategy=strategy,
     )
     return [
         (5, 50, "update_preimage"),
@@ -102,21 +106,26 @@ def test_fused_data_files_hide_change_type(spark, tmp_path):
     assert not os.path.isdir(stage) or os.listdir(stage) == []
 
 
-def test_fused_merge_job_budget(spark, tmp_path):
-    """One CDF cow merge = a bounded driver-job count (VERDICT r18
-    next #3).  The pre-r19 shape ran ~15 jobs for this mutation
-    (separate change write + data write + per-attempt envelope agg +
-    dk probe); the fused shape runs the touch probe, the detection
-    collect, and ONE staging write."""
-    t = _mk(spark, tmp_path, "budget")
+@pytest.mark.parametrize("feed", [False, True], ids=["feed_off", "feed_on"])
+@pytest.mark.parametrize("op", ["cow", "mor", "dv"])
+def test_fused_merge_job_budget(spark, tmp_path, op, feed):
+    """Every keyed mutation runs in a bounded driver-job count, with
+    the change feed off or on: the touch probe, the matching collect
+    (cow detection, or the dv position harvest), and ONE write --
+    data and change files from the same job."""
+    t = _mk(spark, tmp_path, "budget", change_feed=feed)
     st = spark.sparkContext.statusTracker()
     before = set(st.getJobIdsForGroup(None))
-    _merge_once(spark, t)
+    if op == "dv":
+        t.delete("k", values=[5, 7])
+    else:
+        _merge_once(spark, t, strategy=op)
     after = set(st.getJobIdsForGroup(None))
     n_jobs = len(after - before)
     assert n_jobs <= 10, (
-        f"CDF merge ran {n_jobs} driver jobs -- the fused write "
-        "budget (<=10, measured 8-9 incl. AQE stage jobs) regressed"
+        f"{op} mutation (feed={feed}) ran {n_jobs} driver jobs -- the "
+        "one-write budget (<=10, measured 4-9 incl. AQE stage jobs) "
+        "regressed"
     )
 
 
@@ -149,6 +158,38 @@ def test_bulk_matched_path_pins_not_inlines(spark, tmp_path, monkeypatch):
     assert (3, 30, "update_preimage") in feed
     assert (3, 3000, "update_postimage") in feed
     assert len([x for x in feed if x[2] == "insert"]) == 0
+
+
+def test_mutations_release_every_pin(spark, tmp_path, monkeypatch):
+    """The persistent-RDD count returns to its baseline after a CDF dv
+    delete, a CDF mor merge and a bulk-path cow merge -- the pinned
+    pre-image / matched-key frames are released by the commit tail,
+    not left for the JVM GC's ContextCleaner.  The matched cap is
+    lowered so every shape takes its pinned-marker path."""
+    monkeypatch.setattr(ct_mod, "_MATCHED_INLINE_MAX", 3)
+    jsc = spark.sparkContext._jsc
+    src = spark.createDataFrame(
+        [(k, k * 1000) for k in range(10)], "k long, v long"
+    )
+    upserted = sorted(
+        [(k, k * 10, "update_preimage") for k in range(10)]
+        + [(k, k * 1000, "update_postimage") for k in range(10)]
+    )
+    for name, mutate, want in (
+        (
+            "dv",
+            lambda t: t.delete("k", values=list(range(8))),
+            [(k, k * 10, "delete") for k in range(8)],
+        ),
+        ("mor", lambda t: t.merge(src, "k", strategy="mor"), upserted),
+        ("cow", lambda t: t.merge(src, "k"), upserted),
+    ):
+        t = _mk(spark, tmp_path, f"pins_{name}")
+        base = jsc.getPersistentRDDs().size()
+        mutate(t)
+        assert jsc.getPersistentRDDs().size() == base, name
+        # the pinned-marker paths still produce the exact feed
+        assert _feed(t, 1, 1) == want, name
 
 
 def test_fused_loser_cleanup(spark, tmp_path, monkeypatch):

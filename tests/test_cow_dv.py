@@ -46,13 +46,15 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _twin(spark, tmp_path, name, parts=4, n=40):
+def _twin(spark, tmp_path, name, parts=4, n=40, change_feed=False):
     df = (
         spark.range(n)
         .selectExpr("id AS k", "id * 2 AS v")
         .repartition(parts)
     )
-    return CowTable.create(spark, str(tmp_path / name), df)
+    return CowTable.create(
+        spark, str(tmp_path / name), df, change_feed=change_feed
+    )
 
 
 # -- encoding ---------------------------------------------------------
@@ -159,23 +161,73 @@ def test_dv_collect_cap_names_cow(spark, tmp_path, monkeypatch):
 # -- merge(strategy='mor') --------------------------------------------
 
 
-def test_mor_merge_matches_cow_merge(spark, tmp_path):
+@pytest.mark.parametrize(
+    "change_feed", [False, True], ids=["feed_off", "feed_on"]
+)
+def test_mor_merge_matches_cow_merge(spark, tmp_path, change_feed):
     """Update + insert mix: merge-on-read ends at the same rows as
     copy-on-write, with zero files rewritten and the old files all
-    carried."""
-    mor = _twin(spark, tmp_path, "mor")
-    cow = _twin(spark, tmp_path, "cow2")
+    carried -- with the change feed off (no ``changes/`` dir at all)
+    and on (both strategies go through the same classifier)."""
+    mor = _twin(spark, tmp_path, "mor", change_feed=change_feed)
+    cow = _twin(spark, tmp_path, "cow2", change_feed=change_feed)
     src = spark.createDataFrame(
         [(5, -5), (39, -39), (100, -100)], "k long, v long"
     )
     doc = mor.merge(src, "k", strategy="mor")
-    cow.merge(src, "k")
+    cdoc = cow.merge(src, "k")
 
     assert doc["strategy"] == "mor"
     assert doc["files_rewritten"] == 0
     assert doc["files_written"] >= 1
     assert doc["rows_dv_deleted"] == 2  # the two matched keys
     assert _rows(mor.read()) == _rows(cow.read())
+    for t, d in ((mor, doc), (cow, cdoc)):
+        assert bool(d.get("change_files")) == change_feed
+        assert os.path.isdir(os.path.join(t.path, "changes")) == change_feed
+
+
+@pytest.mark.parametrize("strategy", ["cow", "mor"])
+def test_merge_keeps_recorded_column_types(spark, tmp_path, strategy):
+    """A wider-typed source never retypes the table: both strategies
+    cast the source to the RECORDED types (an int column merged with a
+    long source stays int, in the commit doc and on read), and a value
+    that does not fit raises instead of landing.  Nested nullability
+    does not block the cast: a recorded array<string NOT NULL> takes a
+    source array<string>."""
+    df = spark.range(20).selectExpr(
+        "id AS k", "CAST(id * 2 AS INT) AS v", "array(CAST(id AS STRING)) AS t"
+    ).repartition(2)
+    t = CowTable.create(spark, str(tmp_path / f"types_{strategy}"), df)
+    doc = t.merge(
+        spark.createDataFrame(
+            [(5, -5, ["a"]), (100, -100, [None])],
+            "k long, v long, t array<string>",
+        ),
+        "k", strategy=strategy,
+    )
+    recorded = {
+        f["name"]: str(f["type"]) for f in doc["schema"]["fields"]
+    }
+    assert recorded["k"] == "long" and recorded["v"] == "integer"
+    assert dict(t.read().dtypes) == {
+        "k": "bigint", "v": "int", "t": "array<string>",
+    }
+    got = {r["k"]: (r["v"], r["t"]) for r in t.read().collect()}
+    assert got[5] == (-5, ["a"]) and got[100] == (-100, [None])
+    assert len(got) == 21
+    head = t.version()
+    data_dirs = set(os.listdir(os.path.join(t.path, "data")))
+    with pytest.raises(Exception, match="(?i)overflow"):
+        t.merge(
+            spark.createDataFrame(
+                [(6, 1 << 40, [])], "k long, v long, t array<string>"
+            ),
+            "k", strategy=strategy,
+        )
+    assert t.version() == head
+    # the failed write left no orphan output behind
+    assert set(os.listdir(os.path.join(t.path, "data"))) == data_dirs
 
 
 def test_mor_merge_with_deletes_matches_cow(spark, tmp_path):
